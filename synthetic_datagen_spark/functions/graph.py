@@ -69,7 +69,9 @@ class _tiny_graph_confs(narrow_build_confs):
 
     (Shared mechanism in functions/execution.narrow_build_confs — the
     LSH scaffold builds apply the same discipline with their own
-    threshold.)"""
+    threshold.) Its ``apply`` is also the one place that decides whether
+    cached_min_label_components runs a kernel at all: a graph under the
+    cutoff goes to the driver union-find instead."""
 
     def __init__(self, spark: SparkSession, edge_count: int):
         super().__init__(
@@ -103,21 +105,30 @@ def cached_min_label_components(
     to $SPARK_GRAFT_CC_ALGO so a deployment can flip every dedup call
     site at once; results are identical (parity-pinned in tests), so
     the cache key deliberately ignores the kernel choice.
-    """
-    import os
 
+    A pair graph at or under ``SPARK_GRAFT_CC_TINY_EDGES`` pairs (the
+    ``_tiny_graph_confs`` cutoff) skips both kernels: its labels come
+    from ``union_find_components`` on one driver collect.
+    """
     from .memo import app_scoped_memo
 
     def build() -> DataFrame:
         algo = algorithm or os.environ.get("SPARK_GRAFT_CC_ALGO", "largestar")
-        if algo == "largestar":
-            labels = large_small_star_components(
-                pairs_factory(), id_a, id_b, max_rounds
-            )
-        elif algo == "minlabel":
-            labels = min_label_components(pairs_factory(), id_a, id_b, max_rounds)
-        else:
+        kernels = {
+            "largestar": large_small_star_components,
+            "minlabel": min_label_components,
+        }
+        if algo not in kernels:
             raise ValueError(f"unknown CC algorithm {algo!r}")
+        # a graph under the tiny-edge cutoff is one bounded collect: the
+        # driver union-find returns the same labels without the rounds'
+        # per-job floor; bigger graphs run the selected kernel
+        p = pairs_factory().localCheckpoint()
+        if _tiny_graph_confs(spark, p.count()).apply:
+            labels = union_find_components(p, id_a, id_b)
+        else:
+            labels = kernels[algo](p, id_a, id_b, max_rounds)
+        p.unpersist()
         # durability (same policy as functions/vectors.cached_lsh_pairs):
         # with a configured checkpoint dir the memoized frame re-anchors
         # on RELIABLE storage so executor loss can't orphan the session
@@ -137,6 +148,49 @@ def cached_min_label_components(
         return labels
 
     return app_scoped_memo(_CC_CACHE, spark, cache_key, build)
+
+
+def union_find_components(
+    pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b"
+) -> DataFrame:
+    """Connected components of a SMALL pair list on the driver — the
+    same contract as the distributed kernels: (node_id, cluster_id) for
+    every node appearing in >=1 pair (self-pairs included), cluster_id
+    the component's minimum id (null ids stay unlinked, labeled null).
+
+    Union by minimum root keeps every root its component's minimum, so
+    the labels equal the kernels' by construction. The caller bounds
+    the input (``_tiny_graph_confs``): one collect of the pairs and one
+    localCheckpoint of the labels."""
+    from pyspark.sql.types import StructField, StructType
+
+    parent: dict = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs.select(id_a, id_b).collect():
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        if a is None or b is None:
+            continue
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    # node_id's type is the kernels' own: the union of both id columns
+    node = (
+        pairs.select(F.col(id_a).alias("node_id"))
+        .unionAll(pairs.select(F.col(id_b).alias("node_id")))
+        .schema["node_id"]
+    )
+    schema = StructType(
+        [node, StructField("cluster_id", node.dataType, node.nullable)]
+    )
+    rows = [(x, None if x is None else find(x)) for x in parent]
+    return pairs.sparkSession.createDataFrame(rows, schema).localCheckpoint()
 
 
 def min_label_components(

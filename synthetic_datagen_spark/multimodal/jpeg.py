@@ -497,6 +497,9 @@ def _decode_jpeg_impl(data: bytes) -> np.ndarray:
             comps = []
             for c in range(nc):
                 cid, hv, tq = struct.unpack_from(">BBB", body, 6 + 3 * c)
+                if not (1 <= hv >> 4 <= 4 and 1 <= hv & 0x0F <= 4):
+                    # T.81 B.2.2: sampling factors are 1..4
+                    raise ValueError(f"bad sampling factors {hv >> 4}x{hv & 0x0F}")
                 comps.append({"id": cid, "h": hv >> 4, "v": hv & 0x0F, "tq": tq})
             frame = {"h": h, "w": w, "comps": comps, "progressive": marker == 0xC2}
             state = _alloc_coef_state(frame)

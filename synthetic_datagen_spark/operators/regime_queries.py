@@ -28,10 +28,17 @@ def _click_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Version of the fit procedure, part of the artifact key: bump it when
+# the fit's output changes for the same input, so a model written by an
+# older fit is never served warm.
+_FIT_VERSION = "kmeans-init-1"
+
+
 def _artifact_dir(sf_dir: str, n_regimes: int, seed: int) -> str:
     """Cross-session artifact home for one (input, params) fit — keyed on
     the input file's identity (mtime+size) so regenerated testdata can
-    never serve a stale model. S5/S6 layer: the reference's own flow is
+    never serve a stale model, and on ``_FIT_VERSION`` so a changed fit
+    can never serve an old one. S5/S6 layer: the reference's own flow is
     fit → save → load → generate (regime_hmm_garch.py:193-200), extended
     here across sessions so warm g7/g8/m9 skip the EM refit entirely."""
     import hashlib
@@ -45,7 +52,7 @@ def _artifact_dir(sf_dir: str, n_regimes: int, seed: int) -> str:
     except OSError:
         fp = "na"
     key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{n_regimes}|{seed}|{fp}".encode()
+        f"{os.path.abspath(sf_dir)}|{n_regimes}|{seed}|{fp}|{_FIT_VERSION}".encode()
     ).hexdigest()[:16]
     return os.path.join(base, f"regime_{key}")
 
@@ -123,7 +130,7 @@ def _fitted_garch(
 @register(
     "g7_regime_garch_generate",
     # Parquet-captured pin at sf0.01 (tools/pin_oracles.py
-    # --parquet): the GMM/GARCH fits are numpy EM over a
+    # --parquet): the HMM/GARCH fits are numpy EM over a
     # driver-ordered series and generation is a per-series seeded
     # grouped-map. Validated
     # bit-identical across independent processes AND across the
@@ -132,8 +139,9 @@ def _fitted_garch(
     # fit memo could not mask layout sensitivity in the fit itself.
     oracle=pinned_parquet_oracle("g7_regime_garch_generate"),
     pinned_sf="0.01",
-    doc="Full regime pipeline: features (W1+W4+W5) → MLlib GaussianMixture "
-    "regime labels (M5 scale path) → A8 per-regime stats + A7 transition "
+    doc="Full regime pipeline: features (W1+W4+W5) → k-means-initialized "
+    "Gaussian HMM (Baum-Welch + Viterbi) regime labels (M5) → A8 "
+    "per-regime stats + A7 transition "
     "matrix → Spark-parallel GARCH(1,1) grid MLE (M6) → per-series "
     "applyInPandas AR(1)+GARCH generation (G6/G7, W16).",
 )
@@ -165,7 +173,7 @@ def g7_regime_garch_generate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fit memo could not mask layout sensitivity in the fit itself.
     oracle=pinned_parquet_oracle("g8_regime_hybrid_generate"),
     pinned_sf="0.01",
-    doc="G8/G9 regime-segmented block bootstrap: GMM regime labels → "
+    doc="G8/G9 regime-segmented block bootstrap: HMM Viterbi regime labels → "
     "gaps-and-islands per-regime block pools (distributed, capped) → "
     "per-series applyInPandas walk with Markov regime path, block "
     "sampling, and W12 boundary blending (reference: "
@@ -504,7 +512,8 @@ def m16_random_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=pinned_parquet_oracle("m9_regime_gan_generate"),
     pinned_sf="0.01",
     doc="M9/G10 per-regime generator training + regime-chained sampling: "
-    "HMM labels partition the return stream; ONE grouped-map Spark task "
+    "HMM Viterbi labels (the g7 fit) partition the return stream; ONE "
+    "grouped-map Spark task "
     "per regime trains that regime's adversarial linear VAE (numpy SGD "
     "— the no-torch substitute for the reference's per-regime GAN, "
     "regime_gan.py:128-218) on its own windows; sparse regimes return "
@@ -688,10 +697,10 @@ def g9_stitch_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (r9 VERDICT task 5); order-free aggregates only — see g9_stitch_summary doc.
 _PIN_G9_SUMMARY = """
 SELECT * FROM (VALUES
-  ('ar_bridge', CAST(3 AS BIGINT), CAST(447 AS BIGINT), CAST(-5.561541714 AS DOUBLE), CAST(815.671189159 AS DOUBLE), CAST(10.348444863 AS DOUBLE)),
-  ('blend', CAST(3 AS BIGINT), CAST(447 AS BIGINT), CAST(18.345530819 AS DOUBLE), CAST(966.265855885 AS DOUBLE), CAST(12.013081959 AS DOUBLE)),
-  ('crossfade', CAST(3 AS BIGINT), CAST(447 AS BIGINT), CAST(15.907631042 AS DOUBLE), CAST(705.761627668 AS DOUBLE), CAST(10.348444863 AS DOUBLE)),
-  ('none', CAST(3 AS BIGINT), CAST(447 AS BIGINT), CAST(4.378890108 AS DOUBLE), CAST(1066.328762003 AS DOUBLE), CAST(14.185903775 AS DOUBLE))
+  ('ar_bridge', CAST(3 AS BIGINT), CAST(447 AS BIGINT), CAST(17.057343069 AS DOUBLE), CAST(677.393681185 AS DOUBLE), CAST(5.346553458 AS DOUBLE)),
+  ('blend', CAST(3 AS BIGINT), CAST(447 AS BIGINT), CAST(27.041535066 AS DOUBLE), CAST(742.810675719 AS DOUBLE), CAST(5.352072889 AS DOUBLE)),
+  ('crossfade', CAST(3 AS BIGINT), CAST(447 AS BIGINT), CAST(9.850951968 AS DOUBLE), CAST(516.152157699 AS DOUBLE), CAST(4.684938119 AS DOUBLE)),
+  ('none', CAST(3 AS BIGINT), CAST(447 AS BIGINT), CAST(17.963935346 AS DOUBLE), CAST(991.798748043 AS DOUBLE), CAST(9.011135523 AS DOUBLE))
 ) AS t("variant", "n_series", "n_rets", "sum_ret", "sum_abs_ddiff", "max_abs_ddiff")
 """
 

@@ -14,10 +14,10 @@ per-series numpy kernels below are also the single-sequence reference
 replica used by tests — the distributed path and the replica share the
 exact same arithmetic.
 
-Initialization comes from the MLlib GaussianMixture fit (seed-pinned,
-distributed) — the scale substitute for hmmlearn's kmeans init; EM then
-makes the transition structure genuinely part of the likelihood, which
-arg-max GMM labeling (the previous M5 stand-in) ignored.
+Initialization is a driver-side k-means over at most ``INIT_SAMPLE_ROWS``
+rows (``kmeans_init``) — hmmlearn's own kmeans init, which fits on the
+driver over the same ≤16k-row regime; EM then makes the transition
+structure genuinely part of the likelihood.
 """
 
 from __future__ import annotations
@@ -27,8 +27,12 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 _REG = 1e-6  # covariance regularization floor (hmmlearn min_covar-like)
+# rows the k-means init fits on: the first rows in (sequence, order)
+# order — the reference's ≤16k-row driver fit (regime_hmm_garch.py:85)
+INIT_SAMPLE_ROWS = 16384
 
 
 # --------------------------------------------------------------------------
@@ -174,9 +178,103 @@ def fit_hmm_numpy(
     return trans, start, means, covs, ll
 
 
+def kmeans_init(
+    X: np.ndarray, k: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """HMM starting point from Lloyd k-means on the rows of ``X`` —
+    hmmlearn's kmeans init, deterministic in (X, k).
+
+    Centroids start on a per-feature quantile grid at (i+0.5)/k (the
+    ``segmentation.deterministic_kmeans`` convention) and Lloyd runs to
+    a fixed point (ties go to the lowest centroid id; an empty cluster
+    keeps its centroid). Means are the centroids, covariances each
+    cluster's population scatter (the global one for clusters with
+    fewer than two rows), and the cluster weights seed sticky
+    transitions and the start vector. Returns (trans0, start0, means0,
+    covs0)."""
+    n, d = X.shape
+    cents = np.quantile(X, [(i + 0.5) / k for i in range(k)], axis=0)
+    lab = None
+    for _ in range(300):  # a bound only: Lloyd settles in far fewer rounds
+        dist = np.stack([((X - c) ** 2).sum(axis=1) for c in cents], axis=1)
+        new_lab = np.argmin(dist, axis=1)
+        if lab is not None and np.array_equal(new_lab, lab):
+            break
+        lab = new_lab
+        cents = np.array(
+            [X[lab == j].mean(axis=0) if (lab == j).any() else cents[j] for j in range(k)]
+        )
+    glob = np.cov(X, rowvar=False, bias=True).reshape(d, d)
+    covs = np.empty((k, d, d))
+    for j in range(k):
+        members = X[lab == j]
+        if len(members) < 2:
+            covs[j] = glob
+            continue
+        diff = members - cents[j]
+        covs[j] = diff.T @ diff / len(members)
+    # uniform-ish start, uninformative sticky transitions: EM moves both;
+    # starting from the cluster weight vector biases rows equally
+    w0 = np.bincount(lab, minlength=k) / n
+    trans0 = np.tile(w0, (k, 1)) * 0.5 + 0.5 * np.eye(k)
+    trans0 = trans0 / trans0.sum(axis=1, keepdims=True)
+    start0 = w0 / w0.sum()
+    return trans0, start0, cents, covs
+
+
 # --------------------------------------------------------------------------
 # distributed EM + labeling
 # --------------------------------------------------------------------------
+
+
+def driver_sized(df: DataFrame, partition_cols: list[str], n_feats: int) -> bool:
+    """True when ``df`` holds exactly ONE sequence of at most
+    ``SPARK_GRAFT_HMM_DRIVER_MAX`` feature values (default 2M ≈ 16 MB):
+    the size at which the EM loop and Viterbi run on one driver-side
+    copy. Decided with one tiny aggregate, before anything is
+    collected."""
+    import os
+
+    driver_max = int(os.environ.get("SPARK_GRAFT_HMM_DRIVER_MAX", "2000000"))
+    shape = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.countDistinct(F.struct(*partition_cols)).alias("seqs"),
+    ).first()
+    return shape["seqs"] == 1 and shape["n"] * n_feats <= driver_max
+
+
+def baum_welch_local(
+    pdf: pd.DataFrame,
+    feat_cols: list[str],
+    order_col: str,
+    trans: np.ndarray,
+    start: np.ndarray,
+    means: np.ndarray,
+    covs: np.ndarray,
+    n_iter: int = 10,
+    tol: float = 1e-2,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, float]:
+    """``baum_welch`` on ONE sequence already collected to the driver
+    (see ``baum_welch``'s single-sequence note): the same E-step
+    kernel and M-step, with the identity standing in for Spark's sum
+    over one sequence's partials."""
+    K, d = means.shape
+    ll = float("nan")
+    prev_ll = None
+    for _ in range(n_iter):
+        stats = _estep_rows(pdf, feat_cols, order_col, trans, start, means, covs)
+        # one sequence -> one partial per stat: Spark's SUM of a single
+        # DOUBLE is the value itself, so a plain dict build replicates
+        # the distributed aggregation exactly
+        agg = {
+            (r.stat, int(r.i), int(r.j)): float(r.val)
+            for r in stats.itertuples(index=False)
+        }
+        trans, start, means, covs, ll = _mstep(agg, K, d)
+        if prev_ll is not None and abs(ll - prev_ll) < tol:
+            break
+        prev_ll = ll
+    return trans, start, means, covs, ll
 
 
 def _estep_rows(
@@ -262,52 +360,29 @@ def baum_welch(
     K×K + 2·K·d + K·d² doubles — broadcast by closure).
 
     SINGLE-SEQUENCE driver loop (r14, guide §1.2 — the r13
-    deterministic-kmeans precedent): when the frame holds exactly ONE
-    sequence and at most ``SPARK_GRAFT_HMM_DRIVER_MAX`` feature values
-    (default 2M ≈ 16 MB, far under driver limits), every EM iteration
-    is one single-task grouped-map + a tiny agg + a collect — pure
-    per-job protocol floor around the same numpy E-step. The loop then
-    runs driver-side on the ONE collected matrix instead: the E-step is
-    the SAME ``_estep_rows`` function, the per-stat "sum" over one
-    sequence is the identity (order-free — which is why the driver path
-    requires n_sequences == 1; multi-sequence float partials merge in
-    Spark's order and are left distributed), and the M-step is the same
+    deterministic-kmeans precedent): when ``driver_sized`` holds (ONE
+    sequence, at most ``SPARK_GRAFT_HMM_DRIVER_MAX`` feature values),
+    every EM iteration would be one single-task grouped-map + a tiny
+    agg + a collect — pure per-job protocol floor around the same numpy
+    E-step. The loop then runs driver-side (``baum_welch_local``) on
+    the ONE collected matrix instead: the E-step is the SAME
+    ``_estep_rows`` function, the per-stat "sum" over one sequence is
+    the identity (order-free — which is why the driver path requires
+    n_sequences == 1; multi-sequence float partials merge in Spark's
+    order and are left distributed), and the M-step is the same
     ``_mstep``. Bit-identical by construction; pinned by
     tests/test_regime.py::test_baum_welch_driver_twin_bit_identical.
-    The distributed loop remains the at-scale path."""
-    import os
-
+    The size check is one tiny aggregate, so nothing is collected
+    unless the driver path is taken. The distributed loop remains the
+    at-scale path."""
     K, d = means.shape
-    sel = features.select(*partition_cols, order_col, *feat_cols).persist()
-
-    driver_max = int(os.environ.get("SPARK_GRAFT_HMM_DRIVER_MAX", "2000000"))
-    pdf_all: pd.DataFrame | None = None
-    n_rows = sel.count()  # fills the persist; both paths need the pass
-    if n_rows * len(feat_cols) <= driver_max:
-        cand = sel.toPandas()
-        if len(cand.drop_duplicates(subset=list(partition_cols))) == 1:
-            pdf_all = cand
-
-    if pdf_all is not None:
-        sel.unpersist()
-        ll = float("nan")
-        prev_ll = None
-        for _ in range(n_iter):
-            stats = _estep_rows(
-                pdf_all, feat_cols, order_col, trans, start, means, covs
-            )
-            # one sequence -> one partial per stat: Spark's SUM of a
-            # single DOUBLE is the value itself, so a plain dict build
-            # replicates the distributed aggregation exactly
-            agg = {
-                (r.stat, int(r.i), int(r.j)): float(r.val)
-                for r in stats.itertuples(index=False)
-            }
-            trans, start, means, covs, ll = _mstep(agg, K, d)
-            if prev_ll is not None and abs(ll - prev_ll) < tol:
-                break
-            prev_ll = ll
-        return trans, start, means, covs, ll
+    sel = features.select(*partition_cols, order_col, *feat_cols)
+    if driver_sized(sel, partition_cols, len(feat_cols)):
+        return baum_welch_local(
+            sel.toPandas(), feat_cols, order_col, trans, start, means, covs,
+            n_iter=n_iter, tol=tol,
+        )
+    sel = sel.persist()
 
     ll = float("nan")
     prev_ll = None
@@ -335,6 +410,13 @@ def baum_welch(
     return trans, start, means, covs, ll
 
 
+def labeled_schema(schema: StructType) -> StructType:
+    """``viterbi_label``'s output schema: the input's plus ``regime``."""
+    # copy the field list: StructType.add would MUTATE the input frame's
+    # schema object, leaving a phantom `regime` column on it
+    return StructType(list(schema.fields) + [StructField("regime", IntegerType())])
+
+
 def viterbi_label(
     features: DataFrame,
     feat_cols: list[str],
@@ -347,14 +429,8 @@ def viterbi_label(
 ) -> DataFrame:
     """Label every row with its Viterbi state — one grouped-map pass;
     output keeps all input columns plus ``regime``."""
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
     t_c, s_c, m_c, c_c = trans, start, means, covs
-    # copy the field list: StructType.add would MUTATE the input frame's
-    # schema object, leaving a phantom `regime` column on it
-    out_schema = StructType(
-        list(features.schema.fields) + [StructField("regime", IntegerType())]
-    )
+    out_schema = labeled_schema(features.schema)
 
     def label(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(order_col)

@@ -1,9 +1,9 @@
 """M5/A8 — regime labeling + per-regime statistics, Spark-first.
 
 The reference fits a GaussianHMM (hmmlearn, driver-side, ≤16k rows —
-regime_hmm_garch.py:85-93) and labels with Viterbi. This engine runs
-the same model distributed: MLlib GaussianMixture (seed-pinned EM) only
-INITIALIZES the emissions — the hmmlearn-kmeans-init substitute — then
+regime_hmm_garch.py:85-93) from a k-means init and labels with Viterbi.
+This engine does the same: a driver-side k-means over the first ≤16k
+rows (``hmm.kmeans_init``) INITIALIZES the emissions, then
 ``regime/hmm.py`` refines transitions + emissions with multi-sequence
 Baum-Welch (each EM iteration one grouped-map pass, sufficient stats
 aggregated by Spark) and labels with Viterbi, so labels are
@@ -11,6 +11,11 @@ transition-aware exactly like ``hmm.predict``. ``trans``/``start`` are
 the EM-estimated ``transmat_``/``startprob_`` analogues
 (regime_hmm_garch.py:135-143), Laplace-floored so every regime stays
 reachable for generation.
+
+One sequence small enough for the driver (``hmm.driver_sized``) is
+collected once and runs init → Baum-Welch → Viterbi on the driver with
+the same kernels — bit-identical to the distributed path, which stays
+the at-scale one.
 
 Per-regime stats (A8, reference regime_hmm_garch.py:96-127): mean, std,
 skewness, AR(1), count of returns — with the sparse-regime fallback
@@ -23,17 +28,17 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
-from pyspark.ml.clustering import GaussianMixture
-from pyspark.ml.feature import VectorAssembler
 from pyspark.sql import DataFrame, Window, functions as F
 
 
 @dataclass
 class RegimeModel:
     n_regimes: int = 4
+    # the fit is deterministic in its input; the seed only names the
+    # model (artifact key, saved JSON)
     seed: int = 42
     min_points: int = 10
-    # 6 EM refinements from the GMM init stabilize Viterbi labels (the
+    # 6 EM refinements from the k-means init stabilize Viterbi labels (the
     # consumer) well before full loglik convergence; each iteration is a
     # whole grouped-map pass, so the default trades the last decimals of
     # loglik for ~40% of the fit cost
@@ -48,7 +53,16 @@ class RegimeModel:
 
     def fit(self, features: DataFrame, partition_cols: list[str]) -> "RegimeModel":
         """features: output of ``regime_features`` (must carry idx)."""
-        from .hmm import baum_welch, viterbi_label
+        from .hmm import (
+            INIT_SAMPLE_ROWS,
+            _viterbi,
+            baum_welch,
+            baum_welch_local,
+            driver_sized,
+            kmeans_init,
+            labeled_schema,
+            viterbi_label,
+        )
 
         # z-score features like the reference ((f - mean)/(std + 1e-10),
         # regime_hmm_garch.py:79-81) with distributed moments, as plain
@@ -67,33 +81,35 @@ class RegimeModel:
                 / F.lit((moms[f"sd_{c}"] or 0.0) + 1e-10),
             )
             scols.append(sc_name)
-        va = VectorAssembler(inputCols=scols, outputCol="_fv")
-        dv = va.transform(d)
-        # GMM initializes the HMM emissions (hmmlearn kmeans-init
-        # substitute): 30 iters @ 1e-3 is plenty for a starting point —
-        # Baum-Welch owns convergence from here.
-        gmm = GaussianMixture(k=self.n_regimes, seed=self.seed, featuresCol="_fv",
-                              predictionCol="_gmm", maxIter=30, tol=1e-3)
-        model = gmm.fit(dv)
         k = self.n_regimes
-        means0 = np.array([g.mean.toArray() for g in model.gaussians])
-        covs0 = np.array([g.cov.toArray() for g in model.gaussians])
-        # uniform-ish start, uninformative sticky transitions: EM moves
-        # both; starting from the GMM weight vector biases rows equally
-        w0 = np.asarray(model.weights)
-        trans0 = np.tile(w0, (k, 1)) * 0.5 + 0.5 * np.eye(k)
-        trans0 = trans0 / trans0.sum(axis=1, keepdims=True)
-        start0 = w0 / w0.sum()
-
-        d = d.persist()
-        trans, start, means, covs, _ll = baum_welch(
-            d, scols, partition_cols, "idx", trans0, start0, means0, covs0,
-            n_iter=self.hmm_iter,
-        )
-        labeled = viterbi_label(
-            d, scols, partition_cols, "idx", trans, start, means, covs
-        ).drop(*scols)
-        labeled = labeled.persist()
+        order = [*partition_cols, "idx"]
+        if driver_sized(features, partition_cols, len(scols)):
+            # one sequence, driver-sized: collect once, fit and label on
+            # the driver; the k-means sample is the first rows by idx
+            pdf = d.toPandas().sort_values(order, kind="stable", ignore_index=True)
+            X = pdf[scols].to_numpy(dtype=float)
+            init = kmeans_init(X[:INIT_SAMPLE_ROWS], k)
+            trans, start, means, covs, _ll = baum_welch_local(
+                pdf, scols, "idx", *init, n_iter=self.hmm_iter
+            )
+            pdf["regime"] = _viterbi(X, trans, start, means, covs).astype("int32")
+            labeled = d.sparkSession.createDataFrame(
+                pdf, labeled_schema(d.schema)
+            ).coalesce(1)
+        else:
+            sample = (
+                d.select(*order, *scols).orderBy(*order).limit(INIT_SAMPLE_ROWS)
+                .toPandas()
+            )
+            init = kmeans_init(sample[scols].to_numpy(dtype=float), k)
+            d = d.persist()
+            trans, start, means, covs, _ll = baum_welch(
+                d, scols, partition_cols, "idx", *init, n_iter=self.hmm_iter,
+            )
+            labeled = viterbi_label(
+                d, scols, partition_cols, "idx", trans, start, means, covs
+            )
+        labeled = labeled.drop(*scols).persist()
         labeled.count()
         d.unpersist()
         self.labeled = labeled
@@ -147,7 +163,7 @@ class RegimeModel:
                 "skew": 0.0 if sparse else (s["skew"] or 0.0),
                 "ar1": 0.0 if sparse or s["ar1"] is None else float(np.clip(s["ar1"], -0.99, 0.99)),
             }
-        for r in range(k):  # regimes GMM never emitted
+        for r in range(k):  # regimes Viterbi never emitted
             self.stats.setdefault(
                 r, {"n": 0, "mu": glob["mu"], "sigma": glob["sigma"], "skew": 0.0, "ar1": 0.0}
             )

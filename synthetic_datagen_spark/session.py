@@ -1,6 +1,6 @@
 """SparkSession factory.
 
-Defaults are chosen for the local[32] test harness but express the same
+Defaults size a local run to the host's cores but express the same
 knobs a 1000-executor cluster run would set: AQE on (runtime coalesce +
 skew-join), Arrow for every pandas-UDF exchange, explicit shuffle
 partitioning, and a broadcast threshold that catches all dimension tables
@@ -23,9 +23,10 @@ def get_spark(
     """Build (or fetch) the SparkSession.
 
     On a real cluster ``master`` comes from spark-submit; locally we
-    default to ``local[$SPARK_GRAFT_CPUS]``.
+    default to ``local[$SPARK_GRAFT_CPUS]``, else the cores this process
+    may run on.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     shuffle = str(shuffle_partitions or os.environ.get("SPARK_SHUFFLE_PARTITIONS", cpus))
 

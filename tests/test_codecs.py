@@ -514,7 +514,7 @@ def test_alaw_wav_roundtrip():
 
 # --------------------------------------------------------- property fuzz --
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 
 @settings(max_examples=25, deadline=None)
@@ -620,6 +620,7 @@ def test_jpeg_fill_bytes_and_standalone_markers():
 
 @settings(max_examples=40, deadline=None)
 @given(st.integers(0, 2 ** 32 - 1))
+@example(10655)  # corrupts an SOF sampling factor to 0
 def test_fuzz_jpeg_malformed_always_valueerror(seed):
     """decode_jpeg's error contract (same as decode_png/decode_bmp):
     truncations and single-byte corruptions either decode or raise

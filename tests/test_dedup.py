@@ -116,6 +116,7 @@ def test_cc_labels_cached_per_session(spark):
     sf = "/root/testdata/sf0.001"
     calls = {"n": 0}
     real_min, real_lss = G.min_label_components, G.large_small_star_components
+    real_uf = G.union_find_components
 
     def counting_min(*a, **kw):
         calls["n"] += 1
@@ -125,11 +126,17 @@ def test_cc_labels_cached_per_session(spark):
         calls["n"] += 1
         return real_lss(*a, **kw)
 
+    def counting_uf(*a, **kw):
+        calls["n"] += 1
+        return real_uf(*a, **kw)
+
     G._CC_CACHE.clear()
-    # count invocations of EITHER kernel — which one unpinned call
-    # sites use is the session default (largestar since r10)
+    # count invocations of ANY kernel — which one runs is the graph-size
+    # dispatch (the driver union-find under the tiny-edge cutoff, as
+    # here) or else the call site's pinned kernel / session default
     G.min_label_components = counting_min
     G.large_small_star_components = counting_lss
+    G.union_find_components = counting_uf
     try:
         first = REGISTRY["dedup_connected_components"].build(spark, sf).collect()
         assert calls["n"] == 1
@@ -145,6 +152,7 @@ def test_cc_labels_cached_per_session(spark):
     finally:
         G.min_label_components = real_min
         G.large_small_star_components = real_lss
+        G.union_find_components = real_uf
 
 
 def test_simhash_pairs_pigeonhole_complete(spark, sf_smoke):
@@ -470,6 +478,74 @@ def test_large_small_star_matches_min_label_on_all_dedup_families(spark):
         got = _cc_labels(G.large_small_star_components(pairs))
         assert want, f"{name}: empty pair graph defeats the test"
         assert got == want, f"{name}: kernels disagree"
+
+
+def test_cc_dispatch_union_find_matches_kernels_at_cutoff(spark, sf_smoke, monkeypatch):
+    """cached_min_label_components labels a pair graph at or under
+    SPARK_GRAFT_CC_TINY_EDGES pairs with the driver union-find, and a
+    bigger one with the selected kernel. On the real candidate graphs of
+    all three dedup families, with the cutoff forced to each side of
+    the graph's size, the two must give the same rows and schema."""
+    import synthetic_datagen_spark.functions.graph as G
+    from synthetic_datagen_spark.operators import REGISTRY
+    from synthetic_datagen_spark.operators.text_queries import _lsh_candidates
+    from synthetic_datagen_spark.operators.vector_queries import _cached_pairs, _emb
+
+    sf = sf_smoke
+    families = {
+        "text": _lsh_candidates(spark, sf).select("id_a", "id_b"),
+        "embedding": _cached_pairs(spark, sf, 0.35, 8, 4, _emb).select(
+            "id_a", "id_b"
+        ),
+        "image": REGISTRY["multimodal_phash_neardup"]
+        .build(spark, sf)
+        .select("id_a", "id_b"),
+    }
+    ran = []
+    real_uf = G.union_find_components
+
+    def tracking_uf(*a, **kw):
+        ran.append("uf")
+        return real_uf(*a, **kw)
+
+    monkeypatch.setattr(G, "union_find_components", tracking_uf)
+    for name, pairs in families.items():
+        n = pairs.count()
+        assert n, f"{name}: empty pair graph defeats the test"
+        out = {}
+        for algo in ("largestar", "minlabel"):
+            for side, cutoff in (("driver", n), ("kernel", n - 1)):
+                monkeypatch.setenv("SPARK_GRAFT_CC_TINY_EDGES", str(cutoff))
+                ran.clear()
+                out[algo, side] = G.cached_min_label_components(
+                    spark, ("cc_cutoff_twin", name, algo, side), lambda: pairs,
+                    algorithm=algo,
+                )
+                assert ran == (["uf"] if side == "driver" else []), (name, side)
+        want = out["largestar", "kernel"]
+        for key, df in out.items():
+            assert df.schema == want.schema, (name, key)
+            assert _cc_labels(df) == _cc_labels(want), (name, key)
+    G._CC_CACHE.clear()
+
+
+def test_union_find_components_self_pairs_strings_and_nulls(spark):
+    """The driver union-find keeps the kernels' contract on the edge
+    cases: a node whose only pair is a self-pair is labeled with itself,
+    string ids order naturally, and a null id is a lone null-labeled
+    node."""
+    import synthetic_datagen_spark.functions.graph as G
+
+    pairs = spark.createDataFrame(
+        [("b", "a"), ("b", "c"), ("x", "y"), ("zz", "zz"), ("q", None)],
+        "id_a STRING, id_b STRING",
+    )
+    got = _cc_labels(G.union_find_components(pairs))
+    assert got == {
+        "a": "a", "b": "a", "c": "a", "x": "x", "y": "x", "zz": "zz",
+        "q": "q", None: None,
+    }
+    assert got == _cc_labels(G.large_small_star_components(pairs))
 
 
 def test_large_small_star_bounded_rounds_on_chain_and_hub(spark):

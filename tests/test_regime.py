@@ -465,3 +465,118 @@ def test_baum_welch_driver_twin_bit_identical(spark, monkeypatch):
     d2b = run2("2000000")
     for a, b in zip(d2a, d2b):
         assert np.allclose(np.asarray(a), np.asarray(b), atol=0, rtol=0), (a, b)
+
+
+def test_regime_fit_driver_twin_bit_identical(spark, sf_smoke, monkeypatch):
+    """The whole fit has two paths at the SPARK_GRAFT_HMM_DRIVER_MAX
+    cutoff: one driver-sized sequence is collected once (k-means init,
+    Baum-Welch and Viterbi on the driver), anything else runs the
+    distributed Baum-Welch and grouped-map Viterbi. Both must give the
+    same parameters, stats and labeled rows, schema included."""
+    from synthetic_datagen_spark.regime import hmm
+
+    ev = (
+        Catalog(spark, sf_smoke)
+        .table("events")
+        .filter(F.col("event_type") == "click")
+        .select("ts", "event_id", "value")
+    )
+    feats = regime_features(ev, "value", [], ["ts", "event_id"]).withColumn(
+        "series", F.lit(0)
+    ).persist()
+    calls = {"n": 0}
+    real_label = hmm.viterbi_label
+
+    def counting_label(*a, **kw):
+        calls["n"] += 1
+        return real_label(*a, **kw)
+
+    monkeypatch.setattr(hmm, "viterbi_label", counting_label)
+
+    def fit(max_values: str):
+        monkeypatch.setenv("SPARK_GRAFT_HMM_DRIVER_MAX", max_values)
+        m = RegimeModel(n_regimes=3, seed=42).fit(feats, ["series"])
+        return m, m.labeled.orderBy("idx").collect()
+
+    dist, dist_rows = fit("0")
+    assert calls["n"] == 1
+    drv, drv_rows = fit("2000000")
+    assert calls["n"] == 1, "the driver-sized fit must not run the grouped-map Viterbi"
+    feats.unpersist()
+    assert np.array_equal(dist.trans, drv.trans)
+    assert np.array_equal(dist.start, drv.start)
+    assert dist.stats == drv.stats
+    assert dist.labeled.schema == drv.labeled.schema
+    assert [tuple(r) for r in dist_rows] == [tuple(r) for r in drv_rows]
+    assert {r.regime for r in drv_rows} == {0, 1, 2}
+
+
+def test_kmeans_init_recovers_separated_clusters():
+    """kmeans_init: deterministic in its input, and on three separated
+    blobs the means land on the blob centers with per-blob covariances
+    and weights. The blobs are ordered alike on both features, the
+    layout a per-feature quantile-grid start reaches (low/mid/high
+    volatility regimes are)."""
+    from synthetic_datagen_spark.regime.hmm import kmeans_init
+
+    rng = np.random.default_rng(5)
+    centers = np.array([[-4.0, -2.0], [0.0, 1.0], [5.0, 3.0]])
+    sizes = (300, 200, 100)
+    X = np.concatenate(
+        [c + 0.3 * rng.standard_normal((n, 2)) for c, n in zip(centers, sizes)]
+    )
+    rng.shuffle(X)
+    trans0, start0, means0, covs0 = kmeans_init(X, 3)
+    again = kmeans_init(X.copy(), 3)
+    for a, b in zip((trans0, start0, means0, covs0), again):
+        assert np.array_equal(a, b)
+    order = np.argsort(means0[:, 0])
+    assert np.allclose(means0[order], centers, atol=0.1)
+    assert np.allclose(start0[order], np.array(sizes) / sum(sizes))
+    for j in order:
+        assert np.allclose(covs0[j], 0.09 * np.eye(2), atol=0.03)
+    np.testing.assert_allclose(trans0.sum(axis=1), 1.0)
+
+
+def test_regime_artifact_from_older_fit_is_not_read(spark, sf_smoke, tmp_path, monkeypatch):
+    """The artifact key carries the fit version: a model written under
+    the key an older fit used (no version tag) is never served warm."""
+    import hashlib
+    import json
+    import os
+
+    from synthetic_datagen_spark.operators import regime_queries as RQ
+
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path))
+    st = os.stat(os.path.join(sf_smoke, "events.parquet"))
+    fp = f"{st.st_mtime_ns}:{st.st_size}"
+    old_key = hashlib.md5(
+        f"{os.path.abspath(sf_smoke)}|3|42|{fp}".encode()
+    ).hexdigest()[:16]
+    old_dir = tmp_path / f"regime_{old_key}"
+    assert RQ._artifact_dir(sf_smoke, 3, 42) != str(old_dir)
+
+    stale = {"n": 7, "mu": 9.0, "sigma": 9.0, "skew": 0.0, "ar1": 0.0}
+    old_dir.mkdir()
+    with open(old_dir / "model.json", "w") as f:
+        json.dump(
+            {
+                "n_regimes": 3, "seed": 42, "min_points": 10,
+                "trans": np.eye(3).tolist(), "start": [1.0, 0.0, 0.0],
+                "stats": {str(k): stale for k in range(3)},
+            },
+            f,
+        )
+    spark.createDataFrame([(0, 0)], "regime INT, idx INT").write.parquet(
+        str(old_dir / "labeled.parquet")
+    )
+    RQ._MODEL_CACHE.clear()
+    try:
+        model = RQ._fitted_model(spark, sf_smoke)
+        assert not np.array_equal(model.trans, np.eye(3))
+        assert model.stats[0] != stale
+        assert os.path.exists(
+            os.path.join(RQ._artifact_dir(sf_smoke, 3, 42), "model.json")
+        )
+    finally:
+        RQ._MODEL_CACHE.clear()
