@@ -32,7 +32,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .execution import narrow_build_confs
+from .execution import arrow_frame, narrow_build_confs
 
 # Session-scoped memo of converged label frames, keyed by
 # (applicationId, caller key). The converged frame is a localCheckpoint
@@ -161,7 +161,7 @@ def union_find_components(
     Union by minimum root keeps every root its component's minimum, so
     the labels equal the kernels' by construction. The caller bounds
     the input (``_tiny_graph_confs``): one collect of the pairs and one
-    localCheckpoint of the labels."""
+    localCheckpoint of the Arrow-built labels."""
     from pyspark.sql.types import StructField, StructType
 
     parent: dict = {}
@@ -190,7 +190,7 @@ def union_find_components(
         [node, StructField("cluster_id", node.dataType, node.nullable)]
     )
     rows = [(x, None if x is None else find(x)) for x in parent]
-    return pairs.sparkSession.createDataFrame(rows, schema).localCheckpoint()
+    return arrow_frame(pairs.sparkSession, rows, schema).localCheckpoint()
 
 
 def min_label_components(

@@ -13,6 +13,8 @@ from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
+from .execution import arrow_frame
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -325,6 +327,20 @@ def embedding_near_dups(
     )
 
 
+def _sign_bucket_matrix(V, planes):
+    """Sign-LSH buckets of the rows of ``V`` (n, D) float64 under
+    ``planes`` (T, P, D): an (n, T) int64 matrix, bit k of table t set
+    when row · planes[t, k] >= 0, packed big-endian like the JVM fold.
+    One BLAS matmul for every plane of every table; the numpy body of
+    both the Arrow bucket kernel and the driver pair build."""
+    import numpy as np
+
+    tt, pp, dd = planes.shape
+    signs = (V @ planes.reshape(-1, dd).T) >= 0  # (n, T*P)
+    weights = (1 << np.arange(pp - 1, -1, -1)).astype(np.int64)
+    return signs.reshape(len(V), tt, pp).astype(np.int64) @ weights
+
+
 def _with_sign_buckets_arrow(
     df: DataFrame,
     id_alias: str,
@@ -376,15 +392,12 @@ def _with_sign_buckets_arrow(
 
     def buckets(batches):
         P = bc.value
-        tt, pp, dd = P.shape
-        flat = P.reshape(-1, dd)
-        weights = (1 << np.arange(pp - 1, -1, -1)).astype(np.int64)
+        tt = P.shape[0]
         for pdf in batches:
             if not len(pdf):
                 continue
             V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_alias]])
-            signs = (V @ flat.T) >= 0            # (B, T*P)
-            bucks = signs.reshape(len(pdf), tt, pp).astype(np.int64) @ weights
+            bucks = _sign_bucket_matrix(V, P)
             ids = pdf[id_alias].to_numpy()
             cols = {id_alias: np.repeat(ids, tt)}
             if with_vectors:
@@ -427,6 +440,8 @@ def lsh_near_dup_pairs(
     kernel (`_with_sign_buckets_arrow`) — same planes/semantics, ~10×
     faster map side at scale-aware plane counts; reserved for the
     rows-only queries (the JVM fold stays bit-identical to SQL oracles).
+    A corpus small enough to collect can take the same arrow-bucket
+    plan on the driver instead (`lsh_near_dup_pairs_local`).
     """
     mk = _with_sign_buckets_arrow if arrow_buckets else _with_sign_buckets
     base = _spread(df).persist()  # one round-robin pass serves the
@@ -472,6 +487,116 @@ def lsh_near_dup_pairs(
             (dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))).alias("cos_sim"),
         )
         .filter(F.col("cos_sim") >= threshold)
+    )
+
+
+# Schema of the arrow-bucket pair plan: the ids leave the bucket kernel
+# as its LongType output column, cos_sim is the nullable quotient
+_PAIR_SCHEMA = "id_a BIGINT, id_b BIGINT, cos_sim DOUBLE"
+
+# Raw candidates per vector the driver pair build accepts: 4x the 50
+# random candidates per vector scaled_lsh_params sizes its configs for,
+# so only a clustered corpus (quadratic true-pair families) goes over.
+# A bound on driver memory, not a time crossover: at 0.92 of it a
+# clustered 11,440-vector corpus still built 3x faster on the driver
+# (4-core local session)
+_LOCAL_CAND_BUDGET = 4 * 50
+
+
+def lsh_near_dup_pairs_local(
+    df: DataFrame,
+    threshold: float,
+    dim: int,
+    n_tables: int,
+    n_planes: int,
+    seed: int = 42,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame | None:
+    """`lsh_near_dup_pairs` with ``arrow_buckets=True``, run on the
+    driver over one ``toArrow()`` collect of a small corpus: the same
+    rows, ``cos_sim`` bits and schema without the distributed plan's
+    stages, whose second join moves a 64-dim vector per candidate.
+
+    * buckets: ``_sign_bucket_matrix``, the Arrow kernel's numpy body;
+    * candidates: one sort of the (table, bucket) keys, every pair of
+      rows sharing a key, deduplicated, ``id_a < id_b``;
+    * rescore: ``acc = acc + a[k]*b[k]`` folded over the dimensions in
+      order, norms the same way, then ``dot / (na*nb)`` — the steps of
+      Catalyst's ``dot``/``l2_norm`` left folds, so every double is the
+      one the JVM computes; the filter keeps a NaN as Spark's ordering
+      does (NaN sorts above every number).
+
+    Returns None, without materialising a pair, when the distributed
+    plan is the right one: the raw candidate count (Σ s(s−1)/2 over the
+    bucket groups) exceeds ``_LOCAL_CAND_BUDGET · n`` — a clustered
+    corpus whose true-pair set is quadratic — or the corpus has what
+    the dense (n, dim) layout cannot mirror: null or ragged vectors,
+    non-finite values, duplicate ids, or a zero norm in a candidate
+    pair (the plan's ANSI divide raises)."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    tbl = df.select(
+        F.col(id_col).alias("id"), F.col(vec_col).alias("v")
+    ).toArrow()
+    # null ids never pair in the plan (its id_a < id_b filter drops them)
+    tbl = tbl.filter(pc.is_valid(tbl.column("id")))
+    vecs = tbl.column("v").combine_chunks()
+    values = vecs.flatten()
+    if vecs.null_count or values.null_count:
+        return None
+    n = len(vecs)
+    if (pc.list_value_length(vecs).to_numpy() != dim).any():
+        return None
+    X = values.to_numpy(zero_copy_only=False).astype(np.float64).reshape(n, dim)
+    ids = tbl.column("id").to_numpy()
+    order = np.argsort(ids, kind="stable")
+    ids, X = ids[order], X[order]
+    if (n > 1 and (ids[1:] == ids[:-1]).any()) or not np.isfinite(X).all():
+        return None
+
+    # one key per (row, table): table in the high bits, bucket below
+    planes = np.array(
+        [random_hyperplanes(dim, n_planes, seed + t) for t in range(n_tables)]
+    )
+    keys = (
+        _sign_bucket_matrix(X, planes)
+        + (np.arange(n_tables, dtype=np.int64) << n_planes)
+    ).ravel()
+    by_key = np.argsort(keys, kind="stable")
+    rows = by_key // n_tables  # ascending inside each key group
+    ks = keys[by_key]
+    starts = np.flatnonzero(np.r_[True, ks[1:] != ks[:-1]])
+    sizes = np.diff(np.r_[starts, len(ks)])
+    if int((sizes * (sizes - 1) // 2).sum()) > _LOCAL_CAND_BUDGET * n:
+        return None
+    # position p pairs with every later position of its group
+    later = np.repeat(starts + sizes, sizes) - np.arange(len(ks)) - 1
+    first = np.repeat(np.arange(len(ks)), later)
+    second = first + 1 + np.arange(len(first)) - np.repeat(
+        np.cumsum(later) - later, later
+    )
+    # rows are id-sorted, so row order is id order: ra < rb is id_a < id_b
+    pair = np.unique(rows[first] * n + rows[second])
+    ra, rb = pair // n, pair % n
+
+    cols = np.ascontiguousarray(X.T)
+    dot = np.zeros(len(pair))
+    sq = np.zeros(n)
+    for c in cols:
+        dot = dot + c[ra] * c[rb]
+        sq = sq + c * c
+    norm = np.sqrt(sq)
+    den = norm[ra] * norm[rb]
+    if (den == 0.0).any():
+        return None
+    cos = dot / den
+    keep = ~(cos < threshold)
+    return arrow_frame(
+        df.sparkSession,
+        {"id_a": ids[ra[keep]], "id_b": ids[rb[keep]], "cos_sim": cos[keep]},
+        _PAIR_SCHEMA,
     )
 
 

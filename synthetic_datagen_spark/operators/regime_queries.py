@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..functions.execution import arrow_frame
 from ..regime import RegimeModel, RegimeGenerator, fit_garch_grid, regime_features
 from ..sources import Catalog
 from .base import pinned_parquet_oracle, register
@@ -246,7 +247,9 @@ def m14_ga_block_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         (h["gen"], round(h["best"], 6), round(h["mean"], 6), round(res["score"], 6))
         for h in res["history"]
     ]
-    return spark.createDataFrame(rows, "gen INT, gen_best DOUBLE, gen_mean DOUBLE, overall_best DOUBLE")
+    return arrow_frame(
+        spark, rows, "gen INT, gen_best DOUBLE, gen_mean DOUBLE, overall_best DOUBLE"
+    )
 
 
 @register(
@@ -492,8 +495,8 @@ def m16_random_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         (h["batch"], round(h["best"], 6), res["evaluated"], round(res["score"], 6))
         for h in res["history"]
     ]
-    return spark.createDataFrame(
-        rows, "batch INT, batch_best DOUBLE, n_evaluated INT, overall_best DOUBLE"
+    return arrow_frame(
+        spark, rows, "batch INT, batch_best DOUBLE, n_evaluated INT, overall_best DOUBLE"
     )
 
 
@@ -609,7 +612,8 @@ def m15_staged_optimizer(spark: SparkSession, sf_dir: str) -> DataFrame:
          round(s["global_best"], 6), s["n_evals"], s["frozen"])
         for s in res["stages"]
     ]
-    return spark.createDataFrame(
+    return arrow_frame(
+        spark,
         rows,
         "stage INT, name STRING, stage_best DOUBLE, global_best DOUBLE, "
         "n_evals INT, frozen STRING",

@@ -43,6 +43,18 @@ def _fixed_config_max_rows() -> int:
     return int(os.environ.get("SPARK_GRAFT_LSH_FIXED_MAX", "10000"))
 
 
+def _lsh_tiny_rows() -> int:
+    """Corpus size at or below which a vector build is small-data work:
+    the kNN panels and the pair scaffold build under narrow static
+    confs (execution.narrow_build_confs), and an arrow-bucket pair set
+    builds on the driver (V.lsh_near_dup_pairs_local). Default 20 000
+    vectors, about 5 MB of 64-dim float32 to collect. For the driver
+    pair build this bounds driver memory, not time: it still built 4x
+    faster than the distributed plan at 59 400 vectors (4-core local
+    session), with a Python peak 430 MB higher."""
+    return int(os.environ.get("SPARK_GRAFT_LSH_TINY_ROWS", "20000"))
+
+
 # corpus row counts / bulk-cosine floors memoized per (applicationId,
 # sf_dir, corpus kind) — the scale guard needs ONE count job and ONE
 # bounded sample per corpus per session, not one per query (same
@@ -162,8 +174,7 @@ def _knn_panel_memo(
     contract is per-layout (the fit input is repartition-pinned, but
     execution confs stay hands-off around MLlib on principle)."""
     n = _corpus_count(spark, sf_dir, "_emb", _emb(spark, sf_dir))
-    cutoff = int(os.environ.get("SPARK_GRAFT_LSH_TINY_ROWS", "20000"))
-    with X.narrow_build_confs(spark, n, cutoff if narrow else -1):
+    with X.narrow_build_confs(spark, n, _lsh_tiny_rows() if narrow else -1):
         return V.cached_lsh_pairs(spark, ("knn_panel", name, sf_dir), builder)
 
 
@@ -317,7 +328,11 @@ def _cached_pairs(
     the identical (0.35, 8×4) pair set; the strict/scaled siblings memo
     their own configs. One (session, input, config) → one bucket-join.
     ``arrow=True`` selects the numpy bucket kernel (rows-only queries
-    only; oracled configs keep the SQL-bit-identical JVM fold).
+    only; oracled configs keep the SQL-bit-identical JVM fold). An
+    arrow build of a corpus at or under _lsh_tiny_rows runs on the
+    driver (V.lsh_near_dup_pairs_local: one collect, same rows, cos_sim
+    bits and schema), unless its raw candidate count is over that
+    function's budget; then the distributed plan runs.
 
     The requested (n_tables, n_planes) are a REQUEST, not a contract:
     above _fixed_config_max_rows the scale guard swaps in the
@@ -344,17 +359,21 @@ def _cached_pairs(
     # is layout-independent and the driver hash sorts rows). Same
     # discipline as graph._tiny_graph_confs; a big corpus keeps AQE.
     n = _corpus_count(spark, sf_dir, corpus_kind, df)
-    with X.narrow_build_confs(
-        spark, n, int(os.environ.get("SPARK_GRAFT_LSH_TINY_ROWS", "20000"))
-    ):
+    cutoff = _lsh_tiny_rows()
+    config = dict(dim=64, n_tables=n_tables, n_planes=n_planes, seed=42)
+
+    def build() -> DataFrame:
+        if arrow and n <= cutoff:
+            local = V.lsh_near_dup_pairs_local(df, threshold, **config)
+            if local is not None:
+                return local
+        return V.lsh_near_dup_pairs(df, threshold, arrow_buckets=arrow, **config)
+
+    with X.narrow_build_confs(spark, n, cutoff):
         return V.cached_lsh_pairs(
             spark,
             ("lsh_pairs", sf_dir, threshold, n_tables, n_planes, corpus_kind, arrow),
-            lambda: V.lsh_near_dup_pairs(
-                df, threshold, dim=64,
-                n_tables=n_tables, n_planes=n_planes, seed=42,
-                arrow_buckets=arrow,
-            ),
+            build,
         )
 
 
@@ -877,10 +896,14 @@ def embedding_dedup_clusters_scaled(spark: SparkSession, sf_dir: str) -> DataFra
     corpus = _planted_corpus(spark, sf_dir)
     n = _corpus_count(spark, sf_dir, "_planted_corpus", corpus)
     b, L = V.scaled_lsh_params(n, 0.9)
-    # Arrow bucket kernel at every scale: this query is rows-only (no
-    # SQL oracle to stay bit-identical to) and its scale-aware configs
+    # Arrow buckets at every scale: this query is rows-only (no SQL
+    # oracle to stay bit-identical to) and its scale-aware configs
     # carry the largest plane counts in the catalog — exactly where the
     # numpy matmul beats interpreted per-element HOF evaluation most.
+    # At or under _lsh_tiny_rows the whole pair build (buckets,
+    # candidates, rescore) runs on the driver from one collect; above
+    # it, or over the candidate budget, the Arrow kernel feeds the
+    # distributed bucket join.
     # Routing through _dedup_clusters means above _fixed_config_max_rows
     # this query and embedding_dedup_clusters_strict resolve to the SAME
     # pair-memo and CC-memo keys — one bucket-join, one label pass,

@@ -662,3 +662,24 @@ class TestPythonDataSource:
         assert not os.path.exists(f"{path}/_staging") or not os.listdir(
             f"{path}/_staging"
         )
+
+
+def test_arrow_frame_matches_list_frame(spark):
+    """execution.arrow_frame builds the frame createDataFrame(list)
+    builds for the same rows and schema: None stays null in int and
+    string columns, a DDL or StructType schema is kept as given, and a
+    dict of columns builds the same frame as the rows."""
+    from synthetic_datagen_spark.functions.execution import arrow_frame
+
+    ddl = "k INT, name STRING, x DOUBLE, big BIGINT"
+    rows = [(1, "a", 0.5, 2**40), (None, None, None, None), (3, "c", -0.0, -1)]
+    want = spark.createDataFrame(rows, ddl)
+    for got in (
+        arrow_frame(spark, rows, ddl),
+        arrow_frame(spark, rows, want.schema),
+        arrow_frame(spark, dict(zip(want.columns, zip(*rows))), ddl),
+    ):
+        assert got.schema == want.schema
+        assert sorted(map(repr, got.collect())) == sorted(map(repr, want.collect()))
+    assert arrow_frame(spark, [], ddl).schema == want.schema
+    assert arrow_frame(spark, [], ddl).count() == 0

@@ -600,3 +600,106 @@ def test_knn_panel_memo_matches_fresh_build(spark, sf_smoke):
         a = sorted(map(tuple, fresh[name].orderBy(*cols).collect()))
         b = sorted(map(tuple, memo[name].orderBy(*cols).collect()))
         assert a == b, f"{name}: memoized panel differs from fresh build"
+
+
+def _pair_bits(df) -> list:
+    import struct
+
+    return sorted(
+        (r.id_a, r.id_b, struct.pack("<d", r.cos_sim)) for r in df.collect()
+    )
+
+
+def _tracking_local_build(monkeypatch) -> list:
+    """Record each driver pair build _cached_pairs tries: True when it
+    built the pairs, False when it handed the build back."""
+    ran = []
+    real = V.lsh_near_dup_pairs_local
+
+    def tracking(*a, **kw):
+        out = real(*a, **kw)
+        ran.append(out is not None)
+        return out
+
+    monkeypatch.setattr(V, "lsh_near_dup_pairs_local", tracking)
+    return ran
+
+
+def test_lsh_driver_pair_build_matches_distributed_at_cutoff(
+    spark, sf_smoke, monkeypatch
+):
+    """An arrow-bucket pair build at or under SPARK_GRAFT_LSH_TINY_ROWS
+    runs on the driver, one vector over it runs the distributed plan.
+    With the cutoff at n and n-1 on the planted corpus's scaled config,
+    both sides give the same pair rows (cos_sim compared bit for bit),
+    the same schema including nullability, and the same
+    embedding_dedup_clusters_scaled output."""
+    from synthetic_datagen_spark.functions import graph as G
+    from synthetic_datagen_spark.operators import vector_queries as VQ
+
+    n = VQ._corpus_count(
+        spark, sf_smoke, "_planted_corpus", VQ._planted_corpus(spark, sf_smoke)
+    )
+    b, L = V.scaled_lsh_params(n, 0.9)
+    ran = _tracking_local_build(monkeypatch)
+    out = {}
+    for side, cutoff in (("driver", n), ("distributed", n - 1)):
+        monkeypatch.setenv("SPARK_GRAFT_LSH_TINY_ROWS", str(cutoff))
+        V._PAIRS_CACHE.clear()
+        G._CC_CACHE.clear()
+        ran.clear()
+        pairs = VQ._cached_pairs(
+            spark, sf_smoke, 0.9, L, b, VQ._planted_corpus, arrow=True
+        )
+        clusters = VQ.embedding_dedup_clusters_scaled(spark, sf_smoke)
+        assert ran == ([True] if side == "driver" else []), side
+        out[side] = (
+            pairs.schema,
+            _pair_bits(pairs),
+            clusters.schema,
+            [tuple(r) for r in clusters.collect()],
+        )
+    V._PAIRS_CACHE.clear()
+    G._CC_CACHE.clear()
+    assert out["driver"][1], "no planted pair found: the twin compares nothing"
+    assert out["driver"] == out["distributed"]
+
+
+def test_lsh_driver_pair_build_over_budget_takes_distributed_path(
+    spark, monkeypatch
+):
+    """A corpus of repeated vectors puts 150 rows in each bucket of
+    every table: its raw candidate count is far over the budget, so the
+    driver build refuses it before materialising a pair and
+    _cached_pairs returns the distributed plan's rows. Given the budget,
+    the driver build gives the same rows."""
+    import numpy as np
+
+    from synthetic_datagen_spark.operators import vector_queries as VQ
+
+    base = np.random.default_rng(7).standard_normal((2, 64)).astype(np.float32)
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in base[i % 2]]) for i in range(300)],
+        "vec_id BIGINT, embedding ARRAY<FLOAT>",
+    )
+
+    def repeated(spark, sf_dir):
+        return df
+
+    b, L = V.scaled_lsh_params(300, 0.9)
+    want = _pair_bits(
+        V.lsh_near_dup_pairs(
+            df, 0.9, 64, n_tables=L, n_planes=b, seed=42, arrow_buckets=True
+        )
+    )
+    assert len(want) == 2 * 150 * 149 // 2
+    ran = _tracking_local_build(monkeypatch)
+    got = VQ._cached_pairs(spark, "repeated", 0.9, L, b, repeated, arrow=True)
+    assert ran == [False]
+    assert _pair_bits(got) == want
+    monkeypatch.setattr(V, "_LOCAL_CAND_BUDGET", 4 * 10_000)
+    roomy = V.lsh_near_dup_pairs_local(df, 0.9, 64, n_tables=L, n_planes=b)
+    assert _pair_bits(roomy) == want
+    app_id = spark.sparkContext.applicationId
+    for key in [k for k in V._PAIRS_CACHE if k[0] == app_id and "repeated" in k[1]]:
+        del V._PAIRS_CACHE[key]
