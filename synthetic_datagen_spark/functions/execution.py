@@ -2,14 +2,14 @@
 
 Under AQE every materialized exchange becomes its own driver sub-job,
 so a chain that materializes a handful of shuffles over a TINY frame
-(a contracted CC edge set, a below-cutoff LSH candidate scaffold) pays
+(a below-cutoff LSH candidate scaffold or kNN panel) pays
 the per-job scheduling floor many times over while AQE's re-planning
 has nothing to improve — the frames are orders of magnitude below any
 advisory partition size. When a *measured* input size sits below an
 explicit threshold, run the scope with AQE off and a small static
 shuffle width: same plans, same results (every caller's kernel is
-layout-independent by construction — min-aggregations, per-row folds,
-exact rescores — and the callers' outputs are value/oracle-pinned),
+layout-independent by construction — per-row folds, exact
+rescores — and the callers' outputs are value/oracle-pinned),
 one job per materialization instead of one per exchange.
 
 A big input leaves every conf untouched, so cluster runs keep AQE's
@@ -38,17 +38,10 @@ class narrow_build_confs:
     measured unit count is at or below ``threshold``; no-op otherwise.
     Restores the caller's confs on exit."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        n_units: int,
-        threshold: int,
-        parts_env: str = "SPARK_GRAFT_TINY_PARTS",
-        default_parts: str = "8",
-    ):
+    def __init__(self, spark: SparkSession, n_units: int, threshold: int):
         self.spark = spark
         self.apply = n_units <= threshold
-        self.parts = os.environ.get(parts_env, default_parts)
+        self.parts = os.environ.get("SPARK_GRAFT_TINY_PARTS", "8")
         self.saved: dict[str, str] = {}
 
     def __enter__(self):

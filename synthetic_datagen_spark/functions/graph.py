@@ -32,53 +32,21 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .execution import arrow_frame, narrow_build_confs
+from . import memo
+from .execution import arrow_frame
 
-# Session-scoped memo of converged label frames, keyed by
-# (applicationId, caller key). The converged frame is a localCheckpoint
-# (small: one row per node appearing in >=1 pair), and three catalog
-# queries consume the same clustering (dedup_connected_components,
-# corpus_curation_pipeline, embedding_dedup_clusters per input family) —
-# recomputing the iterative rounds per query tripled the heaviest part
-# of the bench. Same pattern as the regime model registry
-# (operators/regime_queries.py:19): deterministic in (input, params), so
-# cached vs fresh results are interchangeable; applicationId in the key
-# isolates sessions, and entries from other (stopped) applications are
-# evicted on the next cache miss.
 _CC_CACHE: dict = {}
 
 
-class _tiny_graph_confs(narrow_build_confs):
-    """Scale-adaptive execution confs for the CC round loops (r13).
-
-    Every round materializes 2-4 shuffles of the CURRENT contracted
-    edge set. Under AQE each of those exchanges is submitted as its own
-    sub-job, so on a small graph (either a small corpus, or late rounds
-    after contraction has collapsed the components) the wall clock is
-    pure driver job-scheduling floor: ~90-130 driver jobs per kernel
-    run at sf0.1 where the converged graph is ~6k edges. When the
-    measured edge count is below ``SPARK_GRAFT_CC_TINY_EDGES`` (default
-    200k — at 32 B/edge that is a ~6 MB frame, far below any size AQE
-    re-planning could help), run the loop with AQE off and a small
-    static shuffle width instead: same plans, same results (the kernels
-    are min-aggregations — layout-independent by construction,
-    parity-pinned in tests/test_dedup.py), one job per materialization
-    instead of one per exchange. Restores the caller's confs on exit;
-    a big graph leaves everything untouched, so cluster runs keep AQE
-    skew/coalesce handling for the heavy early rounds.
-
-    (Shared mechanism in functions/execution.narrow_build_confs — the
-    LSH scaffold builds apply the same discipline with their own
-    threshold.) Its ``apply`` is also the one place that decides whether
-    cached_min_label_components runs a kernel at all: a graph under the
-    cutoff goes to the driver union-find instead."""
+class _tiny_graph_confs:
+    """The CC dispatch decision: a pair graph at or under
+    ``SPARK_GRAFT_CC_TINY_EDGES`` edges (default 200k, a ~6 MB frame)
+    is labeled by the driver union-find (``apply``), a bigger one by a
+    distributed kernel."""
 
     def __init__(self, spark: SparkSession, edge_count: int):
-        super().__init__(
-            spark,
-            edge_count,
-            int(os.environ.get("SPARK_GRAFT_CC_TINY_EDGES", "200000")),
-            parts_env="SPARK_GRAFT_CC_TINY_PARTS",
+        self.apply = edge_count <= int(
+            os.environ.get("SPARK_GRAFT_CC_TINY_EDGES", "200000")
         )
 
 
@@ -110,8 +78,6 @@ def cached_min_label_components(
     ``_tiny_graph_confs`` cutoff) skips both kernels: its labels come
     from ``union_find_components`` on one driver collect.
     """
-    from .memo import app_scoped_memo
-
     def build() -> DataFrame:
         algo = algorithm or os.environ.get("SPARK_GRAFT_CC_ALGO", "largestar")
         kernels = {
@@ -129,25 +95,9 @@ def cached_min_label_components(
         else:
             labels = kernels[algo](p, id_a, id_b, max_rounds)
         p.unpersist()
-        # durability (same policy as functions/vectors.cached_lsh_pairs):
-        # with a configured checkpoint dir the memoized frame re-anchors
-        # on RELIABLE storage so executor loss can't orphan the session
-        # memo; local[*] keeps the cheap localCheckpoint blocks.
-        # Checkpoint files are reclaimed by ContextCleaner on memo
-        # eviction (the dict drop releases the last reference;
-        # spark.cleaner.referenceTracking.cleanCheckpoints=true is set
-        # by session.get_spark).
-        if spark.sparkContext.getCheckpointDir() is not None:
-            # persist around checkpoint(): the write job re-runs lineage
-            # after the materializing action; the cache makes that
-            # re-run a block read instead of a second CC convergence
-            labels = labels.persist()
-            ck = labels.checkpoint(eager=True)
-            labels.unpersist()
-            labels = ck
-        return labels
+        return memo.checkpointed(labels)
 
-    return app_scoped_memo(_CC_CACHE, spark, cache_key, build)
+    return memo.app_scoped_memo(_CC_CACHE, spark, cache_key, build)
 
 
 def union_find_components(
@@ -160,8 +110,8 @@ def union_find_components(
 
     Union by minimum root keeps every root its component's minimum, so
     the labels equal the kernels' by construction. The caller bounds
-    the input (``_tiny_graph_confs``): one collect of the pairs and one
-    localCheckpoint of the Arrow-built labels."""
+    the input (``_tiny_graph_confs``): one collect of the pairs, and the
+    labels come back as an Arrow-built frame."""
     from pyspark.sql.types import StructField, StructType
 
     parent: dict = {}
@@ -190,7 +140,7 @@ def union_find_components(
         [node, StructField("cluster_id", node.dataType, node.nullable)]
     )
     rows = [(x, None if x is None else find(x)) for x in parent]
-    return arrow_frame(pairs.sparkSession, rows, schema).localCheckpoint()
+    return arrow_frame(pairs.sparkSession, rows, schema)
 
 
 def min_label_components(
@@ -234,104 +184,97 @@ def min_label_components(
     retained: list[DataFrame] = []
     p = pairs.localCheckpoint()
     retained.append(p)
-    # r13 optimization-round extension: the pre-loop materializations
-    # (symmetric edge list, initial node->label map) pay the same AQE
-    # sub-job floor the round loop does, so the tiny-confs scope now
-    # opens BEFORE them, sized from the checkpointed pair count
-    # (edges <= 2*pairs, so the 2x estimate compares against the same
-    # edge threshold; counting checkpoint blocks is one cheap job).
-    with _tiny_graph_confs(pairs.sparkSession, 2 * p.count()):
-        edges = (
-            p.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-            .unionAll(p.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
+    edges = (
+        p.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+        .unionAll(p.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
+        .filter(F.col("src") != F.col("dst"))
+        .dropDuplicates()
+        .localCheckpoint()
+    )
+    retained.append(edges)
+    # node set from the ORIGINAL pairs, not the self-loop-filtered edge
+    # list: a node whose only pair is (a, a) still "appears in >=1 pair"
+    # per the contract and must come back labeled with itself (a raw
+    # similarity join naturally emits exact self-matches)
+    labels_cp = (
+        p.select(F.col(id_a).alias("node_id"))
+        .unionAll(p.select(F.col(id_b).alias("node_id")))
+        .distinct()
+        .withColumn("label", F.col("node_id"))
+        .localCheckpoint()
+    )
+    retained.append(labels_cp)
+    labels = labels_cp
+    converged = False
+    # carried edge count (r13): computed once here and re-computed only
+    # when the contracted edge list is rebuilt, so the top-of-round
+    # emptiness probe is a plain int test instead of a per-round job.
+    edges_cnt = edges.count()
+    for _ in range(max_rounds):
+        if edges_cnt == 0:
+            converged = True
+            break
+        # 1. one-hop min over the CURRENT supernode graph (edges are
+        # symmetric, so scanning in-neighbors of dst covers everyone)
+        m = (
+            edges.groupBy(F.col("dst").alias("v"))
+            .agg(F.min("src").alias("nl"))
+            .select("v", F.least(F.col("v"), F.col("nl")).alias("m1"))
+        )
+        # 2. pointer doubling ITERATED TO A FIXED POINT (bounded by
+        # max_rounds inner steps, so total reach per outer round is
+        # 2^max_rounds hops): the mapping frame holds one row per
+        # ACTIVE supernode — far smaller than the edge list — so
+        # compressing paths here is much cheaper than paying extra
+        # edge-join rounds. A chain of any diameter d collapses in ONE
+        # outer round (~log2 d inner self-joins).
+        m2 = m.select("v", F.col("m1").alias("mlab")).localCheckpoint()
+        retained.append(m2)
+        for _ in range(max_rounds):
+            look = m2.select(F.col("v").alias("_lv"), F.col("mlab").alias("_lm"))
+            nxt = (
+                m2.join(look, m2.mlab == look._lv, "left")
+                .select(
+                    "v",
+                    F.least(F.col("mlab"), F.coalesce("_lm", "mlab")).alias("mlab"),
+                    (F.least(F.col("mlab"), F.coalesce("_lm", "mlab"))
+                     < F.col("mlab")).alias("_chg"),
+                )
+                .localCheckpoint()
+            )
+            retained.append(nxt)
+            changed = nxt.filter("_chg").limit(1).count()
+            m2 = nxt.drop("_chg")
+            if changed == 0:
+                break
+        # 3a. compose into the full node->label map
+        new_labels = (
+            labels.join(m2, labels.label == m2.v, "left")
+            .select(
+                "node_id",
+                F.coalesce("mlab", "label").alias("label"),
+            )
+            .localCheckpoint()
+        )
+        retained.append(new_labels)
+        labels = new_labels
+        # 3b. contract the edge list through m, drop self-loops, dedupe
+        ms = m2.select(F.col("v").alias("_sv"), F.col("mlab").alias("_sm"))
+        md = m2.select(F.col("v").alias("_dv"), F.col("mlab").alias("_dm"))
+        new_edges = (
+            edges.join(ms, edges.src == ms._sv, "left")
+            .join(md, edges.dst == md._dv, "left")
+            .select(
+                F.coalesce("_sm", "src").alias("src"),
+                F.coalesce("_dm", "dst").alias("dst"),
+            )
             .filter(F.col("src") != F.col("dst"))
             .dropDuplicates()
             .localCheckpoint()
         )
-        retained.append(edges)
-        # node set from the ORIGINAL pairs, not the self-loop-filtered edge
-        # list: a node whose only pair is (a, a) still "appears in >=1 pair"
-        # per the contract and must come back labeled with itself (a raw
-        # similarity join naturally emits exact self-matches)
-        labels_cp = (
-            p.select(F.col(id_a).alias("node_id"))
-            .unionAll(p.select(F.col(id_b).alias("node_id")))
-            .distinct()
-            .withColumn("label", F.col("node_id"))
-            .localCheckpoint()
-        )
-        retained.append(labels_cp)
-        labels = labels_cp
-        converged = False
-        # carried edge count (r13): computed once here and re-computed only
-        # when the contracted edge list is rebuilt, so the top-of-round
-        # emptiness probe is a plain int test instead of a per-round job.
+        retained.append(new_edges)
+        edges = new_edges
         edges_cnt = edges.count()
-        for _ in range(max_rounds):
-            if edges_cnt == 0:
-                converged = True
-                break
-            # 1. one-hop min over the CURRENT supernode graph (edges are
-            # symmetric, so scanning in-neighbors of dst covers everyone)
-            m = (
-                edges.groupBy(F.col("dst").alias("v"))
-                .agg(F.min("src").alias("nl"))
-                .select("v", F.least(F.col("v"), F.col("nl")).alias("m1"))
-            )
-            # 2. pointer doubling ITERATED TO A FIXED POINT (bounded by
-            # max_rounds inner steps, so total reach per outer round is
-            # 2^max_rounds hops): the mapping frame holds one row per
-            # ACTIVE supernode — far smaller than the edge list — so
-            # compressing paths here is much cheaper than paying extra
-            # edge-join rounds. A chain of any diameter d collapses in ONE
-            # outer round (~log2 d inner self-joins).
-            m2 = m.select("v", F.col("m1").alias("mlab")).localCheckpoint()
-            retained.append(m2)
-            for _ in range(max_rounds):
-                look = m2.select(F.col("v").alias("_lv"), F.col("mlab").alias("_lm"))
-                nxt = (
-                    m2.join(look, m2.mlab == look._lv, "left")
-                    .select(
-                        "v",
-                        F.least(F.col("mlab"), F.coalesce("_lm", "mlab")).alias("mlab"),
-                        (F.least(F.col("mlab"), F.coalesce("_lm", "mlab"))
-                         < F.col("mlab")).alias("_chg"),
-                    )
-                    .localCheckpoint()
-                )
-                retained.append(nxt)
-                changed = nxt.filter("_chg").limit(1).count()
-                m2 = nxt.drop("_chg")
-                if changed == 0:
-                    break
-            # 3a. compose into the full node->label map
-            new_labels = (
-                labels.join(m2, labels.label == m2.v, "left")
-                .select(
-                    "node_id",
-                    F.coalesce("mlab", "label").alias("label"),
-                )
-                .localCheckpoint()
-            )
-            retained.append(new_labels)
-            labels = new_labels
-            # 3b. contract the edge list through m, drop self-loops, dedupe
-            ms = m2.select(F.col("v").alias("_sv"), F.col("mlab").alias("_sm"))
-            md = m2.select(F.col("v").alias("_dv"), F.col("mlab").alias("_dm"))
-            new_edges = (
-                edges.join(ms, edges.src == ms._sv, "left")
-                .join(md, edges.dst == md._dv, "left")
-                .select(
-                    F.coalesce("_sm", "src").alias("src"),
-                    F.coalesce("_dm", "dst").alias("dst"),
-                )
-                .filter(F.col("src") != F.col("dst"))
-                .dropDuplicates()
-                .localCheckpoint()
-            )
-            retained.append(new_edges)
-            edges = new_edges
-            edges_cnt = edges.count()
     if not converged and edges_cnt == 0:
         converged = True  # emptied exactly on the final allowed round
     final = labels.select("node_id", F.col("label").alias("cluster_id"))
@@ -397,93 +340,87 @@ def large_small_star_components(
     # type (string doc fingerprints included). A cast to long here
     # would NULL out non-numeric ids and silently return singletons.
     eu, ev = F.col(id_a), F.col(id_b)
-    # r13 optimization-round extension: open the tiny-confs scope before
-    # the initial edge materialization too (it pays the same AQE sub-job
-    # floor as the rounds), sized from the checkpointed pair count —
-    # an upper bound on |edges|, so it compares against the same
-    # threshold the per-round counts did.
-    with _tiny_graph_confs(pairs.sparkSession, p.count()):
-        edges = (
-            p.filter(eu != ev)
-            .select(F.greatest(eu, ev).alias("u"), F.least(eu, ev).alias("v"))
+    edges = (
+        p.filter(eu != ev)
+        .select(F.greatest(eu, ev).alias("u"), F.least(eu, ev).alias("v"))
+        .dropDuplicates()
+        .localCheckpoint()
+    )
+    retained.append(edges)
+    # |edges| is carried across rounds (each round's fused stats job
+    # returns the next round's count), so the set-equality convergence
+    # test never re-counts a frame it already measured
+    edges_cnt = edges.count()
+    converged = False
+    rounds = 0
+    for _ in range(max_rounds):
+        rounds += 1
+        # large-star over the symmetric view: for node x with closed-
+        # neighborhood min m, emit (w, m) for every neighbor w > x.
+        # Eager localCheckpoint, NOT a lazy persist (r13 probe): the
+        # frame is referenced twice within small-star's plan, and
+        # under AQE a lazily-cached two-shuffle subtree gets
+        # recomputed by concurrently-scheduled sibling stages before
+        # the cache fills — measured 6x slower than paying the one
+        # materialization job.
+        sym = edges.unionAll(
+            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
+        )
+        mins = sym.groupBy("u").agg(F.least(F.min("v"), F.col("u")).alias("m"))
+        large = (
+            sym.join(mins, "u")
+            .filter(F.col("v") > F.col("u"))
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            .filter(F.col("u") != F.col("v"))
             .dropDuplicates()
             .localCheckpoint()
         )
-        retained.append(edges)
-        # |edges| is carried across rounds (each round's fused stats job
-        # returns the next round's count), so the set-equality convergence
-        # test never re-counts a frame it already measured
-        edges_cnt = edges.count()
-        converged = False
-        rounds = 0
-        for _ in range(max_rounds):
-            rounds += 1
-            # large-star over the symmetric view: for node x with closed-
-            # neighborhood min m, emit (w, m) for every neighbor w > x.
-            # Eager localCheckpoint, NOT a lazy persist (r13 probe): the
-            # frame is referenced twice within small-star's plan, and
-            # under AQE a lazily-cached two-shuffle subtree gets
-            # recomputed by concurrently-scheduled sibling stages before
-            # the cache fills — measured 6x slower than paying the one
-            # materialization job.
-            sym = edges.unionAll(
-                edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
+        retained.append(large)
+        # small-star on the big->small orientation: node u with
+        # smaller-neighbor min m relinks those neighbors (and itself)
+        minsS = large.groupBy("u").agg(F.min("v").alias("m"))
+        joined = large.join(minsS, "u")
+        small = (
+            joined.filter(F.col("v") != F.col("m"))
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            .unionAll(joined.select("u", F.col("m").alias("v")))
+            .dropDuplicates()
+            .localCheckpoint()
+        )
+        retained.append(small)
+        # fixed point of (large ∘ small) == star forest, i.e. the
+        # deduped `small` SET-EQUALS `edges`: |small| == |edges| and
+        # small ⊆ edges. r13: both facts come from ONE pass over the
+        # checkpointed frame (left-join against edges, count rows +
+        # count non-matches) instead of the former three jobs
+        # (count + count + anti-join probe) per round.
+        st = (
+            small.join(
+                edges.select("u", "v", F.lit(1).alias("_in")), ["u", "v"], "left"
             )
-            mins = sym.groupBy("u").agg(F.least(F.min("v"), F.col("u")).alias("m"))
-            large = (
-                sym.join(mins, "u")
-                .filter(F.col("v") > F.col("u"))
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                .filter(F.col("u") != F.col("v"))
-                .dropDuplicates()
-                .localCheckpoint()
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.count(F.when(F.col("_in").isNull(), 1)).alias("outside"),
             )
-            retained.append(large)
-            # small-star on the big->small orientation: node u with
-            # smaller-neighbor min m relinks those neighbors (and itself)
-            minsS = large.groupBy("u").agg(F.min("v").alias("m"))
-            joined = large.join(minsS, "u")
-            small = (
-                joined.filter(F.col("v") != F.col("m"))
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                .unionAll(joined.select("u", F.col("m").alias("v")))
-                .dropDuplicates()
-                .localCheckpoint()
+            .first()
+        )
+        edges = small
+        if st["outside"] == 0 and st["n"] == edges_cnt:
+            converged = True
+            break
+        edges_cnt = st["n"]
+    if converged:
+        stars = edges.select(
+            F.col("u").alias("node_id"), F.col("v").alias("label")
+        )
+        final = (
+            nodes.join(stars, "node_id", "left")
+            .select(
+                "node_id",
+                F.coalesce("label", "node_id").alias("cluster_id"),
             )
-            retained.append(small)
-            # fixed point of (large ∘ small) == star forest, i.e. the
-            # deduped `small` SET-EQUALS `edges`: |small| == |edges| and
-            # small ⊆ edges. r13: both facts come from ONE pass over the
-            # checkpointed frame (left-join against edges, count rows +
-            # count non-matches) instead of the former three jobs
-            # (count + count + anti-join probe) per round.
-            st = (
-                small.join(
-                    edges.select("u", "v", F.lit(1).alias("_in")), ["u", "v"], "left"
-                )
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.count(F.when(F.col("_in").isNull(), 1)).alias("outside"),
-                )
-                .first()
-            )
-            edges = small
-            if st["outside"] == 0 and st["n"] == edges_cnt:
-                converged = True
-                break
-            edges_cnt = st["n"]
-        if converged:
-            stars = edges.select(
-                F.col("u").alias("node_id"), F.col("v").alias("label")
-            )
-            final = (
-                nodes.join(stars, "node_id", "left")
-                .select(
-                    "node_id",
-                    F.coalesce("label", "node_id").alias("cluster_id"),
-                )
-                .localCheckpoint()
-            )
+            .localCheckpoint()
+        )
     for df in retained:
         df.unpersist()
     if not converged:

@@ -9,9 +9,7 @@ route (bucket join prunes the candidate space by orders of magnitude).
 
 from __future__ import annotations
 
-from typing import Callable
-
-from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from .execution import arrow_frame
 
@@ -600,61 +598,6 @@ def lsh_near_dup_pairs_local(
     )
 
 
-# Session-scoped memo of materialized near-dup PAIR frames, keyed by
-# (applicationId, caller key) — the same pattern as the shared-CC label
-# memo (functions/graph.py:34-45). Multiple catalog queries consume the
-# identical candidate-pair scaffold (embedding_near_dup_pairs and
-# embedding_dedup_clusters share the 8×4 @ 0.35 config exactly), and the
-# pair set is the *output-bound* part of the computation (small: one row
-# per above-threshold pair), so a localCheckpoint is cheap to hold and —
-# unlike persist() — survives spark.catalog.clearCache() between bench
-# queries and cuts the bucket-join lineage.
-_PAIRS_CACHE: dict = {}
-
-
-def cached_lsh_pairs(
-    spark: SparkSession, cache_key: tuple, builder: Callable[[], DataFrame]
-) -> DataFrame:
-    """Materialized LSH near-dup pairs memoized per (session, cache_key).
-
-    ``builder`` is only invoked on a miss; the result is eagerly
-    checkpointed (deterministic in (input, config), so cached vs fresh
-    frames are interchangeable).
-
-    Durability: when the session has a checkpoint dir configured
-    (``spark.sparkContext.setCheckpointDir`` — the normal posture on a
-    real cluster) the memo uses RELIABLE ``checkpoint()``: blocks live
-    on cold storage and survive executor loss. Without one (local[*]
-    bench/test mode, executor == driver JVM) it falls back to
-    ``localCheckpoint``, whose non-reliable blocks are fine in a
-    single process; a cluster caller that skips setCheckpointDir can
-    still rebuild via ``builder`` on block-fetch failure (the memo key
-    makes the retry trivial).
-
-    Retention: on cross-app memo eviction the dict drop releases the
-    last reference to the checkpointed frame; Spark's ContextCleaner
-    then deletes the reliable checkpoint files because
-    ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` is set
-    by ``session.get_spark`` (without it, files live until the app's
-    checkpoint dir is removed — the documented Spark default)."""
-    from .memo import app_scoped_memo
-
-    def build() -> DataFrame:
-        built = builder()
-        if spark.sparkContext.getCheckpointDir() is not None:
-            # persist around checkpoint(): the reliable-checkpoint
-            # write job re-runs the RDD lineage after the materializing
-            # action — without the cache the whole pair build would
-            # compute TWICE
-            built2 = built.persist()
-            pairs = built2.checkpoint(eager=True)
-            built2.unpersist()
-            return pairs
-        return built.localCheckpoint(eager=True)
-
-    return app_scoped_memo(_PAIRS_CACHE, spark, cache_key, build)
-
-
 def scaled_lsh_params(
     n: int,
     cos_threshold: float = 0.9,
@@ -755,26 +698,6 @@ def threshold_floor(
     S = Mn @ Mn.T
     iu = np.triu_indices(M.shape[0], k=1)
     return float(np.quantile(S[iu], q))
-
-
-def lsh_near_dup_pairs_scaled(
-    df: DataFrame,
-    threshold: float,
-    dim: int,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    target_recall: float = 0.99,
-) -> DataFrame:
-    """lsh_near_dup_pairs with the plane/table count chosen from the
-    corpus size via scaled_lsh_params — the 100 TB configuration path
-    (one count() to size the index, then the same bucket-join plan)."""
-    n = df.count()
-    b, L = scaled_lsh_params(n, threshold, target_recall)
-    return lsh_near_dup_pairs(
-        df, threshold, dim, n_tables=L, n_planes=b, seed=seed,
-        id_col=id_col, vec_col=vec_col,
-    )
 
 
 def ivf_knn(

@@ -405,39 +405,37 @@ def _time_sliced_feed(
     import os
     import time
 
+    from ..functions import memo
     from .source_queries import _scratch
 
-    memo_key = (spark.sparkContext.applicationId, sf_dir, n_slices)
-    hit = _TIME_SLICED_FEEDS.get(memo_key)
-    if hit is not None:
-        return hit
+    def build() -> str:
+        base = _scratch(spark, "time_sliced_feed", sf_dir)
+        ev = _events(spark, sf_dir).select(
+            "event_id", "ts", "user_id", "event_type", "value", "props",
+            F.unix_micros("ts").alias("ts_us"),
+        )
+        lo, hi = ev.agg(F.min("ts_us"), F.max("ts_us")).first()
+        cuts = [lo + (hi - lo) * i // n_slices for i in range(1, n_slices)]
+        bounds = [None, *cuts, None]
+        now = time.time()
+        stamped: set[str] = set()
+        for i in range(n_slices):
+            cond = F.lit(True)
+            if bounds[i] is not None:
+                cond = cond & (F.col("ts_us") >= bounds[i])
+            if bounds[i + 1] is not None:
+                cond = cond & (F.col("ts_us") < bounds[i + 1])
+            ev.where(cond).drop("ts_us").repartition(2).write.mode(
+                "append"
+            ).parquet(base)
+            for f in os.listdir(base):
+                path = os.path.join(base, f)
+                if f.endswith(".parquet") and path not in stamped:
+                    os.utime(path, (now - n_slices + i, now - n_slices + i))
+                    stamped.add(path)
+        return base
 
-    base = _scratch(spark, "time_sliced_feed", sf_dir)
-    ev = _events(spark, sf_dir).select(
-        "event_id", "ts", "user_id", "event_type", "value", "props",
-        F.unix_micros("ts").alias("ts_us"),
-    )
-    lo, hi = ev.agg(F.min("ts_us"), F.max("ts_us")).first()
-    cuts = [lo + (hi - lo) * i // n_slices for i in range(1, n_slices)]
-    bounds = [None, *cuts, None]
-    now = time.time()
-    stamped: set[str] = set()
-    for i in range(n_slices):
-        cond = F.lit(True)
-        if bounds[i] is not None:
-            cond = cond & (F.col("ts_us") >= bounds[i])
-        if bounds[i + 1] is not None:
-            cond = cond & (F.col("ts_us") < bounds[i + 1])
-        ev.where(cond).drop("ts_us").repartition(2).write.mode(
-            "append"
-        ).parquet(base)
-        for f in os.listdir(base):
-            path = os.path.join(base, f)
-            if f.endswith(".parquet") and path not in stamped:
-                os.utime(path, (now - n_slices + i, now - n_slices + i))
-                stamped.add(path)
-    _TIME_SLICED_FEEDS[memo_key] = base
-    return base
+    return memo.app_scoped_memo(_TIME_SLICED_FEEDS, spark, (sf_dir, n_slices), build)
 
 
 @register(

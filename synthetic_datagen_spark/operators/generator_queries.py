@@ -36,7 +36,7 @@ def g4_block_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-ran the whole fit+generate chain; one checkpointed build per
     # session serves both queries, and a memo hit returns the SAME
     # checkpointed frame (identical rows, identical order).
-    from ..functions.vectors import cached_lsh_pairs
+    from ..functions.memo import session_frame
 
     def build() -> DataFrame:
         gen = BlockBootstrapGenerator(block_size=25).fit(
@@ -44,7 +44,7 @@ def g4_block_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return gen.generate(spark, seed=42, n_samples=200, n_series=4)
 
-    return cached_lsh_pairs(spark, ("gen_walk", "g4_bb25", sf_dir), build)
+    return session_frame(spark, ("gen_walk", "g4_bb25", sf_dir), build)
 
 
 @register(
@@ -63,7 +63,7 @@ def g4_block_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def g5_grasynda(spark: SparkSession, sf_dir: str) -> DataFrame:
     # session memo shared with g5_grasynda_summary (see g4 note)
-    from ..functions.vectors import cached_lsh_pairs
+    from ..functions.memo import session_frame
 
     def build() -> DataFrame:
         gen = GrasyndaGenerator(n_states=8).fit(
@@ -71,7 +71,7 @@ def g5_grasynda(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return gen.generate(spark, seed=42, n_samples=200, n_series=4)
 
-    return cached_lsh_pairs(spark, ("gen_walk", "g5_gr8", sf_dir), build)
+    return session_frame(spark, ("gen_walk", "g5_gr8", sf_dir), build)
 
 
 # Pinned literal-VALUES oracles captured at sf0.01 by tools/pin_oracles.py

@@ -4,19 +4,20 @@ tests/test_regime.py)."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..functions import memo
 from ..functions.execution import arrow_frame
 from ..regime import RegimeModel, RegimeGenerator, fit_garch_grid, regime_features
 from ..sources import Catalog
 from .base import pinned_parquet_oracle, register
 
 
-# In-process fitted-model registry: g7/g8/m9 all consume the SAME HMM
-# fit (n_regimes=3, seed=42) — train once per (sf_dir, params), reuse
-# like a persisted model artifact (S5/S6: the reference's own flow is
-# fit -> save -> generate, never refit per consumer). Deterministic, so
-# cached vs fresh fits are interchangeable.
+# Session memo of the fitted regime model and its GARCH grid: g7/g8/m9
+# all consume the SAME HMM fit (n_regimes=3, seed=42); the reference's
+# own flow is fit -> save -> generate, never refit per consumer.
 _MODEL_CACHE: dict = {}
 
 
@@ -35,70 +36,45 @@ def _click_series(spark: SparkSession, sf_dir: str) -> DataFrame:
 _FIT_VERSION = "kmeans-init-1"
 
 
-def _artifact_dir(sf_dir: str, n_regimes: int, seed: int) -> str:
-    """Cross-session artifact home for one (input, params) fit — keyed on
-    the input file's identity (mtime+size) so regenerated testdata can
-    never serve a stale model, and on ``_FIT_VERSION`` so a changed fit
-    can never serve an old one. S5/S6 layer: the reference's own flow is
-    fit → save → load → generate (regime_hmm_garch.py:193-200), extended
-    here across sessions so warm g7/g8/m9 skip the EM refit entirely."""
-    import hashlib
-    import os
-
-    base = os.environ.get("SPARK_GRAFT_ARTIFACT_DIR", "/tmp/spark_graft_artifacts")
-    src = os.path.join(sf_dir, "events.parquet")
-    try:
-        st = os.stat(src)
-        fp = f"{st.st_mtime_ns}:{st.st_size}"
-    except OSError:
-        fp = "na"
-    key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{n_regimes}|{seed}|{fp}|{_FIT_VERSION}".encode()
-    ).hexdigest()[:16]
-    return os.path.join(base, f"regime_{key}")
-
-
 def _fitted_model(
     spark: SparkSession, sf_dir: str, n_regimes: int = 3, seed: int = 42
 ) -> RegimeModel:
-    import os
+    """The fitted model, once per session; across sessions its params
+    (model.json) and labeled stream (labeled.parquet) are an artifact,
+    and a warm start is bit-identical to the session that wrote them
+    (tests/test_regime.py pins the round trip)."""
 
-    key = (sf_dir, n_regimes, seed)
-    if key in _MODEL_CACHE:
-        return _MODEL_CACHE[key]
-    adir = _artifact_dir(sf_dir, n_regimes, seed)
-    model_json = os.path.join(adir, "model.json")
-    labeled_pq = os.path.join(adir, "labeled.parquet")
-    if os.path.exists(model_json) and os.path.exists(
-        os.path.join(labeled_pq, "_SUCCESS")
-    ):
-        # warm start: params from JSON, labeled stream from parquet —
-        # bit-identical to the session that wrote them (fit is
-        # deterministic in (input, params), so cached vs fresh fits are
-        # interchangeable; tests/test_regime.py pins this round-trip)
-        model = RegimeModel.load(model_json)
-        model.labeled = spark.read.parquet(labeled_pq)
-        _MODEL_CACHE[key] = model
+    def build() -> RegimeModel:
+        adir = memo.artifact_dir(
+            "regime", sf_dir, "events", n_regimes, seed, _FIT_VERSION
+        )
+        if adir is not None:
+            model_json = os.path.join(adir, "model.json")
+            labeled_pq = os.path.join(adir, "labeled.parquet")
+            params = memo.read_json(model_json)
+            if params is not None and os.path.exists(
+                os.path.join(labeled_pq, "_SUCCESS")
+            ):
+                model = RegimeModel.from_dict(params)
+                model.labeled = spark.read.parquet(labeled_pq)
+                return model
+        feats = regime_features(
+            _click_series(spark, sf_dir), "value", [], ["ts", "event_id"]
+        ).withColumn("series", F.lit(0)).persist()
+        model = RegimeModel(n_regimes=n_regimes, seed=seed).fit(feats, ["series"])
+        feats.unpersist()
+        if adir is not None:
+            # labeled.parquet first: model.json is the artifact's commit
+            # mark. Later consumers (garch grid, hybrid block pools,
+            # per-regime GAN) scan the parquet instead of the EM lineage.
+            model.labeled.write.mode("overwrite").parquet(labeled_pq)
+            memo.write_json(model_json, model.to_dict())
+            persisted = model.labeled
+            model.labeled = spark.read.parquet(labeled_pq)
+            persisted.unpersist()
         return model
-    feats = regime_features(
-        _click_series(spark, sf_dir), "value", [], ["ts", "event_id"]
-    ).withColumn("series", F.lit(0)).persist()
-    model = RegimeModel(n_regimes=n_regimes, seed=seed).fit(feats, ["series"])
-    feats.unpersist()
-    try:
-        model.labeled.write.mode("overwrite").parquet(labeled_pq)
-        model.save(model_json)
-        # rebind the labeled stream to the artifact just written: later
-        # consumers (garch grid, hybrid block pools, per-regime GAN) scan
-        # a parquet file instead of dragging the whole EM lineage around —
-        # cheap to recompute even if the cache is dropped mid-session
-        persisted = model.labeled
-        model.labeled = spark.read.parquet(labeled_pq)
-        persisted.unpersist()
-    except OSError:
-        pass  # read-only artifact dir: stay session-cached only
-    _MODEL_CACHE[key] = model
-    return _MODEL_CACHE[key]
+
+    return memo.app_scoped_memo(_MODEL_CACHE, spark, (sf_dir, n_regimes, seed), build)
 
 
 def _fitted_garch(
@@ -106,26 +82,23 @@ def _fitted_garch(
 ) -> dict[int, dict]:
     """M6 fit with the same two-level cache as the model (the grid MLE is
     deterministic given the labeled stream, so it persists beside it)."""
-    import json
-    import os
 
-    key = (sf_dir, n_regimes, seed, "garch")
-    if key in _MODEL_CACHE:
-        return _MODEL_CACHE[key]
-    gpath = os.path.join(_artifact_dir(sf_dir, n_regimes, seed), "garch.json")
-    if os.path.exists(gpath):
-        with open(gpath) as f:
-            garch = {int(k): v for k, v in json.load(f).items()}
-    else:
-        garch = fit_garch_grid(spark, model.regime_returns())
-        try:
-            os.makedirs(os.path.dirname(gpath), exist_ok=True)
-            with open(gpath, "w") as f:
-                json.dump({str(k): v for k, v in garch.items()}, f)
-        except OSError:
-            pass
-    _MODEL_CACHE[key] = garch
-    return garch
+    def build() -> dict[int, dict]:
+        adir = memo.artifact_dir(
+            "regime", sf_dir, "events", n_regimes, seed, _FIT_VERSION
+        )
+        gpath = adir and os.path.join(adir, "garch.json")
+        garch = gpath and memo.read_json(gpath)
+        if garch is None:
+            garch = fit_garch_grid(spark, model.regime_returns())
+            if gpath:
+                memo.write_json(gpath, {str(k): v for k, v in garch.items()})
+            return garch
+        return {int(k): v for k, v in garch.items()}
+
+    return memo.app_scoped_memo(
+        _MODEL_CACHE, spark, (sf_dir, n_regimes, seed, "garch"), build
+    )
 
 
 @register(
@@ -655,7 +628,7 @@ def _stitch_variant_rets(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole fit + 4-variant generate + window chain from scratch; one
     checkpointed build per session serves both, and a memo hit returns
     the SAME checkpointed frame (identical rows, identical order)."""
-    from ..functions.vectors import cached_lsh_pairs
+    from ..functions.memo import session_frame
     from ..regime.hybrid import RegimeBootstrapHybrid
 
     def build() -> DataFrame:
@@ -678,7 +651,7 @@ def _stitch_variant_rets(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("log_ret").isNotNull())
         )
 
-    return cached_lsh_pairs(spark, ("gen_walk", "g9_stitch", sf_dir), build)
+    return session_frame(spark, ("gen_walk", "g9_stitch", sf_dir), build)
 
 
 def g9_stitch_variants(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -56,20 +56,20 @@ def _staged_feed(spark: SparkSession, kind: str, sf_dir: str, build) -> str:
     read the SAME staged content (the unrepartitioned events copy ×3,
     the docs copy ×2, the 4-file docs copy ×2) each re-wrote it every
     run. One build per session, siblings read the shared directory
-    read-only — the `_time_sliced_feed` discipline (guide §2.4). The
-    feed content and file layout are identical to what each caller
-    wrote before (same lineage, same writer), so micro-batch structure
-    under maxFilesPerTrigger is unchanged. ``build`` writes the feed to
-    the path on miss; the applicationId-keyed scratch root means the
-    memo can never serve another session's dir."""
-    key = (spark.sparkContext.applicationId, kind, sf_dir)
-    hit = _STAGED_FEEDS.get(key)
-    if hit is not None:
-        return hit
-    base = _scratch(spark, kind, sf_dir)
-    build(base)
-    _STAGED_FEEDS[key] = base
-    return base
+    read-only. The feed content and file layout are identical to what
+    each caller wrote before (same lineage, same writer), so
+    micro-batch structure under maxFilesPerTrigger is unchanged.
+    ``build`` writes the feed to the path on miss; the
+    applicationId-keyed scratch root means the memo can never serve
+    another session's dir."""
+    from ..functions import memo
+
+    def stage() -> str:
+        base = _scratch(spark, kind, sf_dir)
+        build(base)
+        return base
+
+    return memo.app_scoped_memo(_STAGED_FEEDS, spark, (kind, sf_dir), stage)
 
 
 @register(

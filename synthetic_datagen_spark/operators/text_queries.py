@@ -276,9 +276,8 @@ def _bulk_guard_min_docs() -> int:
     return int(os.environ.get("SPARK_GRAFT_TEXT_BULK_MIN", "50000"))
 
 
-# (applicationId, sf_dir, cutoff) → sampled bulk floor (None below the
-# cutoff) — one count job + one bounded sample per corpus per session,
-# same eviction discipline as the embedding family's floor cache
+# (sf_dir, cutoff) → sampled bulk floor (None below the cutoff) — one
+# count job + one bounded sample per corpus per session
 _BULK_CACHE: dict = {}
 
 
@@ -362,8 +361,7 @@ def _lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     family's plans). The frame is deterministic in (corpus, config),
     so the whole family now shares one eagerly-checkpointed build per
     session — the same discipline the embedding family has used since
-    r9 (functions/vectors.cached_lsh_pairs; on a cluster the memo is
-    a reliable checkpoint). bench.py lists the family's first payer
+    r9 (functions/memo.session_frame). bench.py lists the family's first payer
     in MEMO_BUILDERS so cold-vs-steady stays separately reported.
 
     SCALE-GUARDED (r12): above _text_lsh_fixed_max docs the fixed 6x5
@@ -376,7 +374,7 @@ def _lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     the config — and thus every SQL oracle mirroring the fixed band
     structure — is unchanged."""
     from ..functions.execution import narrow_build_confs
-    from ..functions.vectors import cached_lsh_pairs
+    from ..functions.memo import session_frame
 
     def build() -> DataFrame:
         docs = _docs_wide(spark, sf_dir).filter(F.length("text") >= 5)
@@ -393,7 +391,7 @@ def _lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     # candidate set verified identical, 6 076 pairs at sf0.1). The
     # map-side shingle/minhash parallelism is set by _docs_wide's
     # spread, not the shuffle width, so only the tiny band-join
-    # exchanges narrow. The scope wraps the cached_lsh_pairs CALL so it
+    # exchanges narrow. The scope wraps the session_frame CALL so it
     # covers the eager checkpoint that actually runs the build; on a
     # memo hit the scope is a no-op pass-through.
     n_docs = _corpus_size(
@@ -403,7 +401,7 @@ def _lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, n_docs,
         int(os.environ.get("SPARK_GRAFT_TEXT_LSH_TINY_DOCS", "20000")),
     ):
-        return cached_lsh_pairs(spark, ("text_lsh_pairs", sf_dir), build)
+        return session_frame(spark, ("text_lsh_pairs", sf_dir), build)
 
 
 def _active_lsh_config(
@@ -602,14 +600,14 @@ def simhash60_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     (session, input) — the pairs query's signature; wider than the
     32-bit oracled panel so pigeonhole blocks stay selective (15-bit
     blocks: expected random collisions n²·4/2¹⁵ vs n²·4/2⁸ at 8-bit)."""
-    from ..functions.vectors import cached_lsh_pairs
+    from ..functions.memo import session_frame
 
     def build() -> DataFrame:
         d = _docs_wide(spark, sf_dir).filter(F.length(F.trim("text")) > 0)
         toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
         return d.select("doc_id", _simhash_expr(toks, 60).alias("simhash"))
 
-    return cached_lsh_pairs(spark, ("simhash_sigs60", sf_dir), build)
+    return session_frame(spark, ("simhash_sigs60", sf_dir), build)
 
 
 @register(
@@ -2070,14 +2068,13 @@ def _bpe_merges(spark: SparkSession, sf_dir: str, n_merges: int = 40,
     — the contract the pinned oracles rely on), so bpe_train_merges and
     bpe_tokenize_stats share one word-frequency pass + merge loop per
     session instead of re-deriving it each."""
+    from ..functions import memo
     from ..functions.bpe import train_bpe
 
-    key = (spark.sparkContext.applicationId, sf_dir, n_merges, cap)
-    hit = _BPE_MERGES_MEMO.get(key)
-    if hit is None:
-        hit = train_bpe(_bpe_word_freq(spark, sf_dir, cap), n_merges=n_merges)
-        _BPE_MERGES_MEMO[key] = hit
-    return hit
+    return memo.app_scoped_memo(
+        _BPE_MERGES_MEMO, spark, (sf_dir, n_merges, cap),
+        lambda: train_bpe(_bpe_word_freq(spark, sf_dir, cap), n_merges=n_merges),
+    )
 
 
 # Pinned-value oracles (r9): BPE training/tokenization are not

@@ -13,7 +13,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..functions import execution as X, vectors as V
+from ..functions import execution as X, memo, vectors as V
 from ..sources import Catalog
 from .base import pinned_parquet_oracle, register
 
@@ -55,33 +55,15 @@ def _lsh_tiny_rows() -> int:
     return int(os.environ.get("SPARK_GRAFT_LSH_TINY_ROWS", "20000"))
 
 
-# corpus row counts / bulk-cosine floors memoized per (applicationId,
-# sf_dir, corpus kind) — the scale guard needs ONE count job and ONE
-# bounded sample per corpus per session, not one per query (same
-# eviction discipline as the pair/CC memos)
+# one count job and one bounded sample per corpus per session
 _COUNT_CACHE: dict = {}
 _FLOOR_CACHE: dict = {}
-
-
-def _memoized(cache: dict, spark: SparkSession, key: tuple, compute):
-    app_id = spark.sparkContext.applicationId
-    full = (app_id,) + key
-    hit = cache.get(full)
-    if hit is not None:
-        return hit
-    for k in [k for k in cache if k[0] != app_id]:
-        del cache[k]
-    val = compute()
-    cache[full] = val
-    return val
 
 
 def _corpus_count(
     spark: SparkSession, sf_dir: str, corpus_kind: str, df: DataFrame
 ) -> int:
-    return _memoized(
-        _COUNT_CACHE, spark, (sf_dir, corpus_kind), lambda: df.count()
-    )
+    return memo.app_scoped_memo(_COUNT_CACHE, spark, (sf_dir, corpus_kind), df.count)
 
 
 def _scale_guarded_config(
@@ -119,7 +101,7 @@ def _scale_guarded_config(
     n = _corpus_count(spark, sf_dir, corpus_kind, df)
     if n <= _fixed_config_max_rows():
         return n_tables, n_planes, False
-    floor = _memoized(
+    floor = memo.app_scoped_memo(
         _FLOOR_CACHE, spark, (sf_dir, corpus_kind),
         lambda: V.threshold_floor(df, vec_col="embedding"),
     )
@@ -175,7 +157,7 @@ def _knn_panel_memo(
     execution confs stay hands-off around MLlib on principle)."""
     n = _corpus_count(spark, sf_dir, "_emb", _emb(spark, sf_dir))
     with X.narrow_build_confs(spark, n, _lsh_tiny_rows() if narrow else -1):
-        return V.cached_lsh_pairs(spark, ("knn_panel", name, sf_dir), builder)
+        return memo.session_frame(spark, ("knn_panel", name, sf_dir), builder)
 
 
 def _knn_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -356,8 +338,8 @@ def _cached_pairs(
     # wall is AQE sub-job scheduling (measured: 12 driver jobs / 6.5 s
     # for the 2 000-vector sf0.1 build; AQE off + 8 static partitions =
     # 1 job / 3.0 s, pair set identical — the per-row fold arithmetic
-    # is layout-independent and the driver hash sorts rows). Same
-    # discipline as graph._tiny_graph_confs; a big corpus keeps AQE.
+    # is layout-independent and the driver hash sorts rows). A big
+    # corpus keeps AQE.
     n = _corpus_count(spark, sf_dir, corpus_kind, df)
     cutoff = _lsh_tiny_rows()
     config = dict(dim=64, n_tables=n_tables, n_planes=n_planes, seed=42)
@@ -370,7 +352,7 @@ def _cached_pairs(
         return V.lsh_near_dup_pairs(df, threshold, arrow_buckets=arrow, **config)
 
     with X.narrow_build_confs(spark, n, cutoff):
-        return V.cached_lsh_pairs(
+        return memo.session_frame(
             spark,
             ("lsh_pairs", sf_dir, threshold, n_tables, n_planes, corpus_kind, arrow),
             build,
@@ -1340,56 +1322,6 @@ def _semdedup_kernel(threshold: float):
     return dedup
 
 
-def _semdedup_cents_path(sf_dir: str, k: int, pdims: int) -> str:
-    """Cross-session artifact home for one (corpus, config) SemDeDup
-    fit — keyed on the embeddings file's identity (mtime+size) so
-    regenerated testdata can never serve stale centroids (the
-    regime-family artifact discipline)."""
-    import hashlib
-    import os
-
-    base = os.environ.get(
-        "SPARK_GRAFT_ARTIFACT_DIR", "/tmp/spark_graft_artifacts"
-    )
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(src)
-        fp = f"{st.st_mtime_ns}:{st.st_size}"
-    except OSError:
-        fp = "na"
-    key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|semdedup|{k}|{pdims}|"
-        f"{_SEMDEDUP_MAX_ITER}|{fp}".encode()
-    ).hexdigest()[:16]
-    return os.path.join(base, f"semdedup_{key}.json")
-
-
-def _semdedup_load_cents(sf_dir: str, k: int, pdims: int):
-    import json
-    import os
-
-    path = _semdedup_cents_path(sf_dir, k, pdims)
-    if os.path.exists(path):
-        with open(path) as f:
-            return [tuple(c) for c in json.load(f)]
-    return None
-
-
-def _semdedup_save_cents(sf_dir: str, k: int, pdims: int, cents) -> None:
-    import json
-    import os
-
-    path = _semdedup_cents_path(sf_dir, k, pdims)
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = f"{path}.tmp"
-    try:
-        with open(tmp, "w") as f:
-            json.dump([list(c) for c in cents], f)
-        os.replace(tmp, path)
-    except OSError:
-        pass  # artifact write is an optimization, never a failure
-
-
 def _semdedup_labeled(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1467,15 +1399,21 @@ def _semdedup_labeled(
         # (deterministic in the input SET, so a cached fit is
         # interchangeable with a fresh one — the regime-model
         # contract); warm sessions pay one assignment pass
-        cents = _semdedup_load_cents(sf_dir, k, pdims)
+        adir = memo.artifact_dir(
+            "semdedup", sf_dir, "embeddings", k, pdims, _SEMDEDUP_MAX_ITER
+        )
+        cents_json = adir and os.path.join(adir, "cents.json")
+        cents = cents_json and memo.read_json(cents_json)
         if cents is not None:
+            cents = [tuple(c) for c in cents]
             labeled = kmeans_assign(feats.localCheckpoint(eager=True), fcols, cents)
         else:
             labeled, cents = deterministic_kmeans(
                 feats, fcols, k, max_iter=_SEMDEDUP_MAX_ITER,
                 return_centroids=True,
             )
-            _semdedup_save_cents(sf_dir, k, pdims, cents)
+            if cents_json:
+                memo.write_json(cents_json, [list(c) for c in cents])
         # ranking centroid = decimal-exact FULL-dim mean of members
         # (the prefix is only for assignment); one agg, paid once
         cagg = (
@@ -1509,6 +1447,18 @@ def _semdedup_labeled(
         "nv",
         "_cluster",
         (V.dot(F.col("nv"), F.col("carr")) / F.col("_cnrm")).alias("cent_cos"),
+    )
+
+
+def _semdedup_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The clustering (iterative k-means or IVF build) is the corpus
+    artifact; the labeled frame is memoized per session, so warm runs
+    pay only the per-cluster kernel."""
+    return memo.app_scoped_memo(
+        _SEMDEDUP_CACHE,
+        spark,
+        ("semdedup_labeled", sf_dir),
+        lambda: memo.checkpointed(_semdedup_labeled(spark, sf_dir)),
     )
 
 
@@ -1561,17 +1511,7 @@ _PIN_SEMDEDUP = """SELECT * FROM (VALUES
     "recall-vs-LSH and dominance invariants in tests/test_vectors.py.",
 )
 def embedding_semdedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.memo import app_scoped_memo
-
-    # the clustering (iterative k-means or IVF build) is the corpus
-    # artifact; memoize the labeled frame per session so warm runs pay
-    # only the per-cluster kernel (bench steady-state discipline)
-    labeled = app_scoped_memo(
-        _SEMDEDUP_CACHE,
-        spark,
-        ("semdedup_labeled", sf_dir),
-        lambda: _semdedup_labeled(spark, sf_dir).localCheckpoint(eager=True),
-    )
+    labeled = _semdedup_memo(spark, sf_dir)
     return (
         labeled.groupBy("_cluster")
         .applyInPandas(_semdedup_kernel(_SEMDEDUP_TH), _SEMDEDUP_SCHEMA)
@@ -1638,14 +1578,7 @@ def _semdedup_keep_kernel(threshold: float):
     "parquet capture.",
 )
 def embedding_semdedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.memo import app_scoped_memo
-
-    labeled = app_scoped_memo(
-        _SEMDEDUP_CACHE,
-        spark,
-        ("semdedup_labeled", sf_dir),
-        lambda: _semdedup_labeled(spark, sf_dir).localCheckpoint(eager=True),
-    )
+    labeled = _semdedup_memo(spark, sf_dir)
     schema = "vec_id long, cluster_id long, rnk long, keep boolean"
     return (
         labeled.groupBy("_cluster")

@@ -181,34 +181,39 @@ class RegimeModel:
     # regime_conditional.py:188-195 — HMM/GARCH models serialize as
     # plain JSON; the labeled training frame is data, not model, and is
     # re-derivable, so it is not persisted).
-    def save(self, path: str) -> None:
-        import json
-        import os
-
+    def to_dict(self) -> dict:
         if self.trans is None:
             raise RuntimeError("fit() first")
+        return {
+            "n_regimes": self.n_regimes,
+            "seed": self.seed,
+            "min_points": self.min_points,
+            "trans": self.trans.tolist(),
+            "start": self.start.tolist(),
+            "stats": {str(k): v for k, v in self.stats.items()},
+        }
+
+    @classmethod
+    def from_dict(cls, d: dict) -> "RegimeModel":
+        m = cls(n_regimes=d["n_regimes"], seed=d["seed"], min_points=d["min_points"])
+        m.trans = np.array(d["trans"])
+        m.start = np.array(d["start"])
+        m.stats = {int(k): v for k, v in d["stats"].items()}
+        return m
+
+    def save(self, path: str) -> None:
+        import os
+
+        from ..functions.memo import write_json
+
+        params = self.to_dict()
         os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-        with open(path, "w") as f:
-            json.dump(
-                {
-                    "n_regimes": self.n_regimes,
-                    "seed": self.seed,
-                    "min_points": self.min_points,
-                    "trans": self.trans.tolist(),
-                    "start": self.start.tolist(),
-                    "stats": {str(k): v for k, v in self.stats.items()},
-                },
-                f,
-            )
+        if not write_json(path, params):
+            raise OSError(f"could not write model {path}")
 
     @classmethod
     def load(cls, path: str) -> "RegimeModel":
         import json
 
         with open(path) as f:
-            d = json.load(f)
-        m = cls(n_regimes=d["n_regimes"], seed=d["seed"], min_points=d["min_points"])
-        m.trans = np.array(d["trans"])
-        m.start = np.array(d["start"])
-        m.stats = {int(k): v for k, v in d["stats"].items()}
-        return m
+            return cls.from_dict(json.load(f))

@@ -622,7 +622,7 @@ def test_pair_and_cc_memos_use_reliable_checkpoint_when_dir_set(spark, tmp_path)
     import os
 
     import synthetic_datagen_spark.functions.graph as G
-    from synthetic_datagen_spark.functions.vectors import cached_lsh_pairs
+    from synthetic_datagen_spark.functions.memo import session_frame
 
     sc = spark.sparkContext
     ckdir = str(tmp_path / "ck")
@@ -631,7 +631,7 @@ def test_pair_and_cc_memos_use_reliable_checkpoint_when_dir_set(spark, tmp_path)
         pairs_df = spark.createDataFrame(
             [(1, 2), (2, 3), (10, 11)], "id_a LONG, id_b LONG"
         )
-        out = cached_lsh_pairs(
+        out = session_frame(
             spark, ("reliable_ck_test", "x"), lambda: pairs_df
         )
         assert out.count() == 3

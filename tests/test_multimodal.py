@@ -207,16 +207,16 @@ def test_scale_guarded_pigeonhole_same_pairs_as_fixed(spark, monkeypatch):
     fixed = {n: pairs(n) for n in (
         "multimodal_phash_neardup", "multimodal_audio_fingerprint_neardup")}
     # invalidate the session pair memo so the guarded configs rebuild
-    from synthetic_datagen_spark.functions import vectors as V
+    from synthetic_datagen_spark.functions import memo as M
 
     monkeypatch.setenv("SPARK_GRAFT_PIGEONHOLE_FIXED_MAX", "10")
-    for k in [k for k in V._PAIRS_CACHE if k[1][0] in ("phash_pairs", "audio_fp_pairs")]:
-        del V._PAIRS_CACHE[k]
+    for k in [k for k in M._FRAMES if k[1][0] in ("phash_pairs", "audio_fp_pairs")]:
+        del M._FRAMES[k]
     with warnings.catch_warnings():
         warnings.simplefilter("ignore")  # tiny corpus may trip the bulk warning
         guarded = {n: pairs(n) for n in fixed}
-    for k in [k for k in V._PAIRS_CACHE if k[1][0] in ("phash_pairs", "audio_fp_pairs")]:
-        del V._PAIRS_CACHE[k]  # don't leak guarded-config pairs to other tests
+    for k in [k for k in M._FRAMES if k[1][0] in ("phash_pairs", "audio_fp_pairs")]:
+        del M._FRAMES[k]  # don't leak guarded-config pairs to other tests
     assert guarded == fixed
     assert all(len(v) > 50 for v in fixed.values())
 

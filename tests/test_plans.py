@@ -102,7 +102,7 @@ def test_embedding_near_dup_is_candidate_pruned(spark):
     equi-join on (tbl, bucket), NOT an all-pairs broadcast-nested-loop
     over id_a < id_b. Asserted on the un-memoized builder because the
     registered query serves a localCheckpoint'd frame from the shared
-    pairs memo (functions/vectors.cached_lsh_pairs) whose visible plan
+    pairs memo (functions/memo.session_frame) whose visible plan
     is just the checkpoint scan."""
     import io as _io
     import contextlib as _ctx

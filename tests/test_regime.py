@@ -236,6 +236,7 @@ def test_regime_artifact_cache_warm_equals_cold(spark, sf_smoke, tmp_path, monke
     """S5/S6 cross-session cache: a warm g7 run served from the on-disk
     artifact (model.json + labeled.parquet + garch.json) produces
     bit-identical output to the cold fit that wrote it."""
+    from synthetic_datagen_spark.functions import memo as M
     from synthetic_datagen_spark.operators import regime_queries as RQ
 
     monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path))
@@ -245,7 +246,7 @@ def test_regime_artifact_cache_warm_equals_cold(spark, sf_smoke, tmp_path, monke
         .orderBy("series_id", "t")
         .collect()
     )
-    adir = RQ._artifact_dir(sf_smoke, 3, 42)
+    adir = M.artifact_dir("regime", sf_smoke, "events", 3, 42, RQ._FIT_VERSION)
     import os
 
     assert os.path.exists(os.path.join(adir, "model.json"))
@@ -545,6 +546,7 @@ def test_regime_artifact_from_older_fit_is_not_read(spark, sf_smoke, tmp_path, m
     import json
     import os
 
+    from synthetic_datagen_spark.functions import memo as M
     from synthetic_datagen_spark.operators import regime_queries as RQ
 
     monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path))
@@ -554,7 +556,8 @@ def test_regime_artifact_from_older_fit_is_not_read(spark, sf_smoke, tmp_path, m
         f"{os.path.abspath(sf_smoke)}|3|42|{fp}".encode()
     ).hexdigest()[:16]
     old_dir = tmp_path / f"regime_{old_key}"
-    assert RQ._artifact_dir(sf_smoke, 3, 42) != str(old_dir)
+    new_dir = M.artifact_dir("regime", sf_smoke, "events", 3, 42, RQ._FIT_VERSION)
+    assert new_dir != str(old_dir)
 
     stale = {"n": 7, "mu": 9.0, "sigma": 9.0, "skew": 0.0, "ar1": 0.0}
     old_dir.mkdir()
@@ -576,7 +579,7 @@ def test_regime_artifact_from_older_fit_is_not_read(spark, sf_smoke, tmp_path, m
         assert not np.array_equal(model.trans, np.eye(3))
         assert model.stats[0] != stale
         assert os.path.exists(
-            os.path.join(RQ._artifact_dir(sf_smoke, 3, 42), "model.json")
+            os.path.join(new_dir, "model.json")
         )
     finally:
         RQ._MODEL_CACHE.clear()

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from synthetic_datagen_spark.functions import vectors as V
+from synthetic_datagen_spark.functions import memo as M, vectors as V
 from synthetic_datagen_spark.sources import Catalog
 
 
@@ -157,12 +157,11 @@ def test_strict_dedup_planted_corpus_recall_and_threshold(spark, sf_smoke):
 def test_scaled_lsh_params_and_recall(spark, sf_smoke):
     """scaled_lsh_params grows planes with log2(n) so random-collision
     candidates stay ~linear in corpus size; tables are set for >=99%
-    pair recall at the threshold. On the fixture, the scaled config
-    must find every brute-force pair at >= 0.9."""
-    from synthetic_datagen_spark.functions.vectors import (
-        lsh_near_dup_pairs_scaled, scaled_lsh_params,
-    )
-    from synthetic_datagen_spark.operators.vector_queries import _planted_corpus
+    pair recall at the threshold. On the fixture, the pair build the
+    scaled query runs (_cached_pairs with the scaled config) must find
+    every brute-force pair at >= 0.9."""
+    from synthetic_datagen_spark.functions.vectors import scaled_lsh_params
+    from synthetic_datagen_spark.operators import vector_queries as VQ
 
     # monotone plane growth, bounded candidate rate
     prev_b = 0
@@ -172,11 +171,12 @@ def test_scaled_lsh_params_and_recall(spark, sf_smoke):
         assert L * n / 2.0**b <= 100.0  # <= 2*cands_per_vec
         prev_b = b
 
-    corpus = _planted_corpus(spark, sf_smoke)
+    corpus = VQ._planted_corpus(spark, sf_smoke)
+    b, L = scaled_lsh_params(corpus.count(), 0.9)
     bf = V.embedding_near_dups(corpus, 0.9).select("id_a", "id_b")
-    sc = lsh_near_dup_pairs_scaled(corpus, 0.9, dim=64, seed=42).select(
-        "id_a", "id_b"
-    )
+    sc = VQ._cached_pairs(
+        spark, sf_smoke, 0.9, L, b, VQ._planted_corpus, arrow=True
+    ).select("id_a", "id_b")
     nb = bf.count()
     assert nb > 0
     hits = bf.join(sc, ["id_a", "id_b"]).count()
@@ -441,16 +441,16 @@ def test_strict_and_scaled_share_memos_above_cutoff(spark, sf_smoke, monkeypatch
         ("lsh_pairs", sf_smoke, 0.9, L, b, "_planted_corpus", True),
     )
     cc_key = (app_id, (f"emb_lsh_cc_0.9_{L}x{b}__planted_corpus", sf_smoke))
-    assert pair_key in V._PAIRS_CACHE, sorted(V._PAIRS_CACHE)
+    assert pair_key in M._FRAMES, sorted(M._FRAMES)
     assert cc_key in G._CC_CACHE, sorted(G._CC_CACHE)
-    pair_keys = set(V._PAIRS_CACHE)
+    pair_keys = set(M._FRAMES)
     cc_keys = set(G._CC_CACHE)
     scaled = {
         r.vec_id: r.cluster_id
         for r in VQ.embedding_dedup_clusters_scaled(spark, sf_smoke).collect()
     }
     # scaled added NO new memo entries: both levels shared
-    assert set(V._PAIRS_CACHE) == pair_keys
+    assert set(M._FRAMES) == pair_keys
     assert set(G._CC_CACHE) == cc_keys
     assert scaled == strict
 
@@ -534,7 +534,13 @@ def test_semdedup_warm_start_interchangeable(spark, sf_smoke):
     import math
 
     k = max(4, math.isqrt(n))
-    path = VQ._semdedup_cents_path(sf_smoke, k, VQ._SEMDEDUP_CLUSTER_DIMS)
+    path = os.path.join(
+        M.artifact_dir(
+            "semdedup", sf_smoke, "embeddings", k,
+            VQ._SEMDEDUP_CLUSTER_DIMS, VQ._SEMDEDUP_MAX_ITER,
+        ),
+        "cents.json",
+    )
     if os.path.exists(path):
         os.remove(path)
     VQ._SEMDEDUP_CACHE.clear()
@@ -645,7 +651,7 @@ def test_lsh_driver_pair_build_matches_distributed_at_cutoff(
     out = {}
     for side, cutoff in (("driver", n), ("distributed", n - 1)):
         monkeypatch.setenv("SPARK_GRAFT_LSH_TINY_ROWS", str(cutoff))
-        V._PAIRS_CACHE.clear()
+        M._FRAMES.clear()
         G._CC_CACHE.clear()
         ran.clear()
         pairs = VQ._cached_pairs(
@@ -659,7 +665,7 @@ def test_lsh_driver_pair_build_matches_distributed_at_cutoff(
             clusters.schema,
             [tuple(r) for r in clusters.collect()],
         )
-    V._PAIRS_CACHE.clear()
+    M._FRAMES.clear()
     G._CC_CACHE.clear()
     assert out["driver"][1], "no planted pair found: the twin compares nothing"
     assert out["driver"] == out["distributed"]
@@ -701,5 +707,5 @@ def test_lsh_driver_pair_build_over_budget_takes_distributed_path(
     roomy = V.lsh_near_dup_pairs_local(df, 0.9, 64, n_tables=L, n_planes=b)
     assert _pair_bits(roomy) == want
     app_id = spark.sparkContext.applicationId
-    for key in [k for k in V._PAIRS_CACHE if k[0] == app_id and "repeated" in k[1]]:
-        del V._PAIRS_CACHE[key]
+    for key in [k for k in M._FRAMES if k[0] == app_id and "repeated" in k[1]]:
+        del M._FRAMES[key]
