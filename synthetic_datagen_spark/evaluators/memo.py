@@ -6,33 +6,31 @@ once).
 
 The memo key should capture every input that affects the value — the
 reference uses the config dict; callers here pass an explicit key.
-Idempotent across processes (atomic rename) and cheap to probe.
+The file goes through the artifact store's JSON reader and atomic
+writer (functions/memo.py), and follows its policy: a missing, corrupt
+or non-dict file reads as empty, and a failed write still returns the
+computed value.
 """
 
 from __future__ import annotations
 
-import json
+import contextlib
 import os
-import tempfile
 from collections.abc import Callable
+
+from ..functions.memo import read_json, write_json
 
 
 def json_memo(path: str, key: str, compute: Callable[[], dict]) -> dict:
     """Return memo[key], computing and persisting it on first use."""
-    memo: dict = {}
-    if os.path.exists(path):
-        try:
-            with open(path) as f:
-                memo = json.load(f)
-        except (json.JSONDecodeError, OSError):
-            memo = {}
+    memo = read_json(path)
+    if not isinstance(memo, dict):
+        memo = {}
     if key in memo:
         return memo[key]
     value = compute()
     memo[key] = value
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path) or ".")
-    with os.fdopen(fd, "w") as f:
-        json.dump(memo, f)
-    os.replace(tmp, path)  # atomic: concurrent writers never corrupt
+    with contextlib.suppress(OSError):
+        os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
+    write_json(path, memo)
     return value

@@ -15,8 +15,10 @@ one job per materialization instead of one per exchange.
 A big input leaves every conf untouched, so cluster runs keep AQE's
 skew/coalesce handling where it matters. This is the cluster behavior
 (coalesce tiny shuffles) minus the per-stage job overhead, not a
-local[32] constant: the thresholds are data-size cutoffs (env-tunable),
-not core counts.
+local[32] constant: the thresholds are data-size cutoffs, not core
+counts. ``conf_scope`` is the one save/restore of session confs: the
+narrow build scope and the narrowed streaming parities
+(``streaming.runner``) both go through it.
 
 ``arrow_frame`` is the Arrow path for a frame built on the driver with
 an explicit schema: a pyarrow Table, which never starts Python workers.
@@ -27,38 +29,46 @@ are listed under ROADMAP's open items.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 
-class narrow_build_confs:
-    """Context manager: AQE off + static narrow shuffle width while the
-    measured unit count is at or below ``threshold``; no-op otherwise.
-    Restores the caller's confs on exit."""
+TINY_PARTS = 8  # the static shuffle width of every narrowed scope
 
-    def __init__(self, spark: SparkSession, n_units: int, threshold: int):
+
+class conf_scope:
+    """Context manager: ``confs`` set on the session for the scope, the
+    caller's values restored on exit (also on an exception)."""
+
+    def __init__(self, spark: SparkSession, confs: dict[str, str]):
         self.spark = spark
-        self.apply = n_units <= threshold
-        self.parts = os.environ.get("SPARK_GRAFT_TINY_PARTS", "8")
+        self.confs = confs
         self.saved: dict[str, str] = {}
 
     def __enter__(self):
-        if self.apply:
-            conf = self.spark.conf
-            for k, v in (
-                ("spark.sql.adaptive.enabled", "false"),
-                ("spark.sql.shuffle.partitions", self.parts),
-            ):
-                self.saved[k] = conf.get(k)
-                conf.set(k, v)
+        conf = self.spark.conf
+        for k, v in self.confs.items():
+            self.saved[k] = conf.get(k)
+            conf.set(k, v)
         return self
 
     def __exit__(self, *exc):
         for k, v in self.saved.items():
             self.spark.conf.set(k, v)
         return False
+
+
+class narrow_build_confs(conf_scope):
+    """AQE off + the static ``TINY_PARTS`` shuffle width while the
+    measured unit count is at or below ``threshold``; no-op otherwise."""
+
+    def __init__(self, spark: SparkSession, n_units: int, threshold: int):
+        self.apply = n_units <= threshold
+        narrow = {
+            "spark.sql.adaptive.enabled": "false",
+            "spark.sql.shuffle.partitions": str(TINY_PARTS),
+        }
+        super().__init__(spark, narrow if self.apply else {})
 
 
 def arrow_frame(

@@ -69,17 +69,16 @@ def cached_min_label_components(
     cost never depends on component diameter — the default since the
     r10 100×-documents probe measured it 0.71× of min-label's wall at
     487k labeled nodes, SCALE_SWEEP_r10.json) or "minlabel"
-    (pointer-doubling + contraction min-label propagation). Defaults
-    to $SPARK_GRAFT_CC_ALGO so a deployment can flip every dedup call
-    site at once; results are identical (parity-pinned in tests), so
-    the cache key deliberately ignores the kernel choice.
+    (pointer-doubling + contraction min-label propagation). Results
+    are identical (parity-pinned in tests), so the cache key
+    deliberately ignores the kernel choice.
 
     A pair graph at or under ``SPARK_GRAFT_CC_TINY_EDGES`` pairs (the
     ``_tiny_graph_confs`` cutoff) skips both kernels: its labels come
     from ``union_find_components`` on one driver collect.
     """
     def build() -> DataFrame:
-        algo = algorithm or os.environ.get("SPARK_GRAFT_CC_ALGO", "largestar")
+        algo = algorithm or "largestar"
         kernels = {
             "largestar": large_small_star_components,
             "minlabel": min_label_components,
@@ -318,7 +317,7 @@ def large_small_star_components(
     The result is identical to min_label_components (parity-pinned on
     all three dedup families in tests/test_dedup.py); which kernel the
     dedup call sites use is selected by cached_min_label_components'
-    ``algorithm`` argument / SPARK_GRAFT_CC_ALGO. Rounds used are
+    ``algorithm`` argument. Rounds used are
     exposed as ``.lss_rounds`` on the returned frame so tests can pin
     the bound. Raises instead of returning a non-converged forest.
     """

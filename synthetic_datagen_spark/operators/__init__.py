@@ -22,43 +22,45 @@ from . import event_queries  # noqa: F401,E402
 
 # Round 15 window (63 names, asserted below; the correctness check
 # samples about the first 50 by position, so the order is a priority
-# list). First the queries whose computation moved since the last check
-# (R15_WINDOW_PREP.md: frames built on the driver or through Arrow, the
-# re-pinned regime family, the CC consumers of the driver union-find);
-# then the consumers of the session memos folded into functions/memo
-# (staged and time-sliced stream feeds, the BPE merge table, the
-# SemDeDup labeled frame); then the rows longest without a green check.
+# list). First the 13 streaming parities, whose streams now run through
+# streaming.runner.run_to_memory; then the queries whose computation
+# moved since the last check (R15_WINDOW_PREP.md: frames built on the
+# driver or through Arrow, the re-pinned regime family, the CC consumers
+# of the driver union-find); then the other consumers of the session
+# memos folded into functions/memo (the BPE merge table, the SemDeDup
+# labeled frame); then the rows longest without a green check.
 _ROUND15_WINDOW = [
+    # -- streaming parities moved onto the one stream runner
+    "stream_batch_parity_rollup",
+    "stream_session_parity",
+    "stream_dedup_parity",
+    "stream_corpus_curation_parity",
+    "stream_regime_generate_parity",
+    "stream_pq_encode_parity",
+    "stream_decontamination_parity",
+    "stream_funnel_parity",
+    "stream_repeated_span_parity",
+    "stream_pii_scrub_parity",
+    "stream_quality_score_parity",
+    "stream_event_pattern_parity",
+    "stream_stream_interval_join_parity",
     # -- computation moved since the last check
     "embedding_dedup_clusters_scaled",
     "m14_ga_block_search",
     "m15_staged_optimizer",
     "m16_random_sweep",
-    "stream_repeated_span_parity",
     "g7_regime_garch_generate",
     "g8_regime_hybrid_generate",
     "m9_regime_gan_generate",
     "g9_stitch_variants",
     "g9_stitch_summary",
-    "stream_regime_generate_parity",
     "dedup_connected_components",
     "dedup_cc_large_star",
     "corpus_curation_pipeline",
     "embedding_dedup_clusters",
     "embedding_dedup_clusters_strict",
     "multimodal_cross_dedup_clusters",
-    # -- session-memo consumers
-    "stream_batch_parity_rollup",
-    "stream_corpus_curation_parity",
-    "stream_decontamination_parity",
-    "stream_dedup_parity",
-    "stream_funnel_parity",
-    "stream_pii_scrub_parity",
-    "stream_pq_encode_parity",
-    "stream_quality_score_parity",
-    "stream_session_parity",
-    "stream_event_pattern_parity",
-    "stream_stream_interval_join_parity",
+    # -- other session-memo consumers
     "bpe_train_merges",
     "bpe_tokenize_stats",
     "embedding_semdedup_clusters",

@@ -458,9 +458,7 @@ def _time_sliced_feed(
     "oracle, exact.",
 )
 def stream_event_pattern_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    from ..streaming import read_events_stream, stream_cep_pattern
+    from ..streaming import read_events_stream, run_to_memory, stream_cep_pattern
 
     base = _time_sliced_feed(spark, sf_dir, "stream_cep")
     code = (
@@ -474,23 +472,10 @@ def stream_event_pattern_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = read_events_stream(spark, base, max_files_per_trigger=2).select(
         "user_id", (F.unix_micros("ts") * 8 + code).alias("ev")
     )
-    name = f"cep_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            stream_cep_pattern(stream, _CEP_WINDOW_US)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return (
-        spark.table(name)
+        run_to_memory(
+            stream_cep_pattern(stream, _CEP_WINDOW_US), "update", "cep", narrow=True
+        )
         .groupBy("user_id")
         .agg(
             F.max_by(
@@ -544,9 +529,7 @@ GROUP BY c.user_id ORDER BY c.user_id
 def stream_stream_interval_join_parity(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import uuid
-
-    from ..streaming import read_events_stream
+    from ..streaming import read_events_stream, run_to_memory
 
     base = _time_sliced_feed(spark, sf_dir, "stream_ssj")
     clicks = (
@@ -571,22 +554,8 @@ def stream_stream_interval_join_parity(
         "user_id",
         (F.unix_micros("p_ts") - F.unix_micros("c_ts")).alias("delta_us"),
     )
-    name = f"ssj_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return (
-        spark.table(name)
+        run_to_memory(joined, "append", "ssj", narrow=True)
         .groupBy("user_id")
         .agg(
             F.count("*").alias("n_pairs"),

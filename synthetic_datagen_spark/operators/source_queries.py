@@ -72,6 +72,17 @@ def _staged_feed(spark: SparkSession, kind: str, sf_dir: str, build) -> str:
     return memo.app_scoped_memo(_STAGED_FEEDS, spark, (kind, sf_dir), stage)
 
 
+def _events_feed(spark: SparkSession, sf_dir: str) -> str:
+    """The events table staged as one unrepartitioned replay feed,
+    shared by the rollup, session and dedup parities (this also turns
+    the testdata's ns timestamps into Spark-native µs)."""
+    return _staged_feed(
+        spark, "stream", sf_dir,
+        lambda p: Catalog(spark, sf_dir).table("events")
+        .write.mode("overwrite").parquet(p),
+    )
+
+
 @register(
     "s2_csv_union_dedup",
     oracle="""
@@ -151,33 +162,15 @@ GROUP BY 1, 2
     "differs (SURVEY §2.13).",
 )
 def stream_batch_parity_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
+    from ..streaming import read_events_stream, run_to_memory, stream_hourly_rollup
 
-    from ..streaming import read_events_stream, stream_hourly_rollup
-
-    # FileStreamSource needs a directory; stage a normalized copy (this
-    # also converts the testdata's ns timestamps to Spark-native µs).
+    # FileStreamSource needs a directory: read the staged events copy.
     # count-only output so stream-vs-batch sum ordering cannot differ.
-    base = _staged_feed(
-        spark, "stream", sf_dir,
-        lambda p: Catalog(spark, sf_dir)
-        .table("events")
-        .write.mode("overwrite")
-        .parquet(p),
+    stream = read_events_stream(spark, _events_feed(spark, sf_dir))
+    rolled = stream_hourly_rollup(stream, watermark="0 seconds").select(
+        "hour_start", "event_type", "n_events"
     )
-    name = f"rollup_{uuid.uuid4().hex[:8]}"
-    stream = read_events_stream(spark, base)
-    q = (
-        stream_hourly_rollup(stream, watermark="0 seconds")
-        .select("hour_start", "event_type", "n_events")
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name).select(
+    return run_to_memory(rolled, "complete", "rollup").select(
         F.unix_micros("hour_start").alias("hour_us"), "event_type", "n_events"
     )
 
@@ -265,30 +258,13 @@ FROM sess GROUP BY user_id, sid
     "(SURVEY §2.13).",
 )
 def stream_session_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
+    from ..streaming import read_events_stream, run_to_memory, stream_session_stats
 
-    from ..streaming import read_events_stream, stream_session_stats
-
-    base = _staged_feed(
-        spark, "stream", sf_dir,
-        lambda p: Catalog(spark, sf_dir)
-        .table("events")
-        .write.mode("overwrite")
-        .parquet(p),
-    )
-    name = f"sess_{uuid.uuid4().hex[:8]}"
-    stream = read_events_stream(spark, base)
-    q = (
-        stream_session_stats(stream, gap="30 minutes", watermark="0 seconds")
-        .select("user_id", "session_start", "n_events")
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name).select(
+    stream = read_events_stream(spark, _events_feed(spark, sf_dir))
+    sessions = stream_session_stats(
+        stream, gap="30 minutes", watermark="0 seconds"
+    ).select("user_id", "session_start", "n_events")
+    return run_to_memory(sessions, "complete", "sess").select(
         "user_id",
         F.unix_micros("session_start").alias("session_start_us"),
         "n_events",
@@ -308,30 +284,13 @@ GROUP BY event_type
     "type (SURVEY §2.13).",
 )
 def stream_dedup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
+    from ..streaming import read_events_stream, run_to_memory, stream_dedup_keep_first
 
-    from ..streaming import read_events_stream, stream_dedup_keep_first
-
-    base = _staged_feed(
-        spark, "stream", sf_dir,
-        lambda p: Catalog(spark, sf_dir)
-        .table("events")
-        .write.mode("overwrite")
-        .parquet(p),
+    stream = read_events_stream(spark, _events_feed(spark, sf_dir))
+    kept = stream_dedup_keep_first(stream, watermark="0 seconds").select(
+        "event_id", "event_type"
     )
-    name = f"dedup_{uuid.uuid4().hex[:8]}"
-    stream = read_events_stream(spark, base)
-    q = (
-        stream_dedup_keep_first(stream, watermark="0 seconds")
-        .select("event_id", "event_type")
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name).groupBy("event_type").agg(
+    return run_to_memory(kept, "append", "dedup").groupBy("event_type").agg(
         F.countDistinct("event_id").alias("n_unique")
     )
 
@@ -391,25 +350,16 @@ GROUP BY lang
     "the source differs.",
 )
 def stream_corpus_curation_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
+    from ..streaming import run_to_memory
 
     docs = Catalog(spark, sf_dir).table("documents")
     base = _staged_feed(
         spark, "stream_docs", sf_dir,
         lambda p: docs.write.mode("overwrite").parquet(p),
     )
-    name = f"curate_{uuid.uuid4().hex[:8]}"
     stream = spark.readStream.schema(docs.schema).parquet(base)
-    curated = curated_doc_stream(stream)
-    q = (
-        curated.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name).groupBy("lang").agg(F.count("*").alias("n_docs"))
+    curated = run_to_memory(curated_doc_stream(stream), "append", "curate")
+    return curated.groupBy("lang").agg(F.count("*").alias("n_docs"))
 
 
 _PIN_STREAM_REGIME_GENERATE_PARITY = """
@@ -441,10 +391,9 @@ SELECT * FROM (VALUES
     "come from the shared g7 artifact cache (no refit).",
 )
 def stream_regime_generate_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     import numpy as np
 
+    from ..streaming import run_to_memory
     from ..streaming.stateful import online_generate_batch, stream_online_generator
     from .regime_queries import _click_series, _fitted_garch, _fitted_model
 
@@ -483,29 +432,14 @@ def stream_regime_generate_parity(spark: SparkSession, sf_dir: str) -> DataFrame
         .option("maxFilesPerTrigger", 1)
         .parquet(base)
     )
-    name = f"gen_{uuid.uuid4().hex[:8]}"
     # 3 series keys need nowhere near the session's 32-200 state
-    # partitions; 8 bounds the per-trigger state-store commit fan-out.
-    # Scoped to the stream start only (captured in the checkpoint);
-    # the tick values are batch- and partition-invariant by
+    # partitions: narrow bounds the per-trigger state-store commit
+    # fan-out. The tick values are batch- and partition-invariant by
     # construction (counter RNG), so the pinned panel is unchanged.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            stream_online_generator(
-                stream, trans_cum, start_cum, stats, garch, seed=42, p0=p0
-            )
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    streamed = spark.table(name).select(
+    generated = stream_online_generator(
+        stream, trans_cum, start_cum, stats, garch, seed=42, p0=p0
+    )
+    streamed = run_to_memory(generated, "append", "gen", narrow=True).select(
         "series_id", "step", F.col("regime").alias("regime_s"),
         F.col("price").alias("price_s"),
     )
@@ -559,11 +493,10 @@ def stream_regime_generate_parity(spark: SparkSession, sf_dir: str) -> DataFrame
     "watermark and O(1) state at any corpus size.",
 )
 def stream_pq_encode_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     import numpy as np
 
     from ..functions.vectors import fit_pq_codebooks, pq_encode_frame
+    from ..streaming import run_to_memory
 
     emb = Catalog(spark, sf_dir).table("embeddings")
     # staged once per session (r14, the _staged_feed discipline):
@@ -583,18 +516,9 @@ def stream_pq_encode_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = spark.readStream.schema(emb.schema).option(
         "maxFilesPerTrigger", 1
     ).parquet(base)
-    name = f"pqenc_{uuid.uuid4().hex[:8]}"
-    q = (
-        pq_encode_frame(stream, books)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-
-    streamed = spark.table(name).select(
+    streamed = run_to_memory(
+        pq_encode_frame(stream, books), "append", "pqenc"
+    ).select(
         F.col("neighbor_id").alias("vec_id"), F.col("codes").alias("s_codes")
     )
     batch = pq_encode_frame(emb, books).select(
@@ -642,8 +566,7 @@ GROUP BY g.doc_id ORDER BY g.doc_id
     "query's SQL verbatim.",
 )
 def stream_decontamination_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
+    from ..streaming import run_to_memory
     from .text_queries import _decon_gram_frames
 
     docs = Catalog(spark, sf_dir).table("documents")
@@ -674,18 +597,8 @@ def stream_decontamination_parity(spark: SparkSession, sf_dir: str) -> DataFrame
         ).alias("g"),
     ).filter(F.col("doc_id") % 97 != 0)
     matched = grams.join(F.broadcast(bench), "g").select("doc_id", "g")
-
-    name = f"decon_{uuid.uuid4().hex[:8]}"
-    q = (
-        matched.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
     return (
-        spark.table(name)
+        run_to_memory(matched, "append", "decon")
         .groupBy("doc_id")
         .agg(F.count("*").alias("overlap_grams"))
         .orderBy("doc_id")
@@ -851,9 +764,7 @@ SELECT (SELECT COUNT(*) FROM staged WHERE first_view IS NOT NULL) AS n_view,
     "current stage anchors (watermark-prunable in production).",
 )
 def stream_funnel_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    from ..streaming import read_events_stream, stream_funnel_stages
+    from ..streaming import read_events_stream, run_to_memory, stream_funnel_stages
 
     # 8 hash-shuffled files: each spans the full time range, so both
     # intra-batch disorder and cross-batch late arrivals are exercised.
@@ -865,7 +776,6 @@ def stream_funnel_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda p: Catalog(spark, sf_dir).table("events").repartition(8)
         .write.mode("overwrite").parquet(p),
     )
-    name = f"funnel_{uuid.uuid4().hex[:8]}"
     # 8 files, 3 per trigger → 3 micro-batches (r13, the span-twin
     # trigger trim): cross-batch late arrivals are still exercised
     # (every file spans the full time range), but each avoided trigger
@@ -876,21 +786,10 @@ def stream_funnel_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = read_events_stream(spark, base, max_files_per_trigger=3).select(
         "user_id", "event_type", F.unix_micros("ts").alias("ts_us")
     )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            stream_funnel_stages(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    final = spark.table(name).groupBy("user_id").agg(
+    emitted = run_to_memory(
+        stream_funnel_stages(stream), "update", "funnel", narrow=True
+    )
+    final = emitted.groupBy("user_id").agg(
         F.max_by(
             F.struct("first_view", "first_click", "first_purchase"), "emit_seq"
         ).alias("s")
@@ -1013,8 +912,7 @@ FROM grp GROUP BY doc_id, gid
     "the same spans, which is exactly what the shared oracle checks.",
 )
 def stream_repeated_span_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
+    from ..streaming import run_to_memory
     from ..streaming.stateful import stream_hot_gram_positions
 
     K = 5
@@ -1076,32 +974,19 @@ def stream_repeated_span_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.col("gr.pos").alias("pos"), F.col("gr.g").alias("g")
     )
 
-    name = f"spans_{uuid.uuid4().hex[:8]}"
-    # the stateful operator's partition count is captured at stream
-    # START (and pinned in the checkpoint): 8 state partitions means 8
-    # state-store commits per trigger instead of the session's 32-200,
-    # with the 256 gram buckets spread 32-per-partition — the commit
-    # cost is the harness floor, the python-call count is unchanged.
-    # Scoped to the stream only; the conf is restored before the batch
-    # span assembly below. Parity is partition-count-invariant (the
-    # emitted position SET is what downstream consumes).
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            stream_hot_gram_positions(occ)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    # narrow: 8 state partitions means 8 state-store commits per
+    # trigger instead of the session's 32-200, with the 256 gram
+    # buckets spread 32-per-partition — the commit cost is the harness
+    # floor, the python-call count is unchanged. The width is restored
+    # before the batch span assembly below. Parity is
+    # partition-count-invariant (the emitted position SET is what
+    # downstream consumes).
+    hot = run_to_memory(
+        stream_hot_gram_positions(occ), "append", "spans", narrow=True
+    )
 
     w = Window.partitionBy("doc_id").orderBy("pos")
-    brk = spark.table(name).select(
+    brk = hot.select(
         "doc_id",
         "pos",
         F.when(F.col("pos") - F.lag("pos").over(w) > K, 1).otherwise(0).alias("brk"),
@@ -1151,7 +1036,7 @@ FROM p ORDER BY doc_id
     "bit-exact, including the md5 of every redacted text.",
 )
 def stream_pii_scrub_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
+    from ..streaming import run_to_memory
 
     PII = _PII
 
@@ -1174,16 +1059,7 @@ def stream_pii_scrub_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.md5(PII.pii_redact("ptext")).alias("redacted_fp"),
     )
 
-    name = f"piiscrub_{uuid.uuid4().hex[:8]}"
-    q = (
-        scrubbed.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name).orderBy("doc_id")
+    return run_to_memory(scrubbed, "append", "piiscrub").orderBy("doc_id")
 
 
 @register(
@@ -1209,9 +1085,8 @@ def stream_pii_scrub_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     "document including the double scores.",
 )
 def stream_quality_score_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from ..functions import quality_clf as QC
+    from ..streaming import run_to_memory
 
     docs = Catalog(spark, sf_dir).table("documents")
     train_base = (
@@ -1247,13 +1122,4 @@ def stream_quality_score_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         (sc > 0).cast("int").alias("pred"),
     )
 
-    name = f"qscore_{uuid.uuid4().hex[:8]}"
-    q = (
-        scored.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name).orderBy("doc_id")
+    return run_to_memory(scored, "append", "qscore").orderBy("doc_id")

@@ -347,6 +347,11 @@ def _minhash_bulk_guard(
         )
 
 
+# corpus size at or under which the text band-join scaffold builds
+# under narrow confs (the embedding scaffold's 20 k row cutoff)
+_TEXT_LSH_TINY_DOCS = 20_000
+
+
 def _lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(id_a, id_b) MinHash-LSH candidate pairs, distinct — MEMOIZED
     per (session, corpus) under the shared ``text_lsh_pairs`` key.
@@ -397,10 +402,7 @@ def _lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_docs = _corpus_size(
         spark, sf_dir, _docs_wide(spark, sf_dir).filter(F.length("text") >= 5)
     )
-    with narrow_build_confs(
-        spark, n_docs,
-        int(os.environ.get("SPARK_GRAFT_TEXT_LSH_TINY_DOCS", "20000")),
-    ):
+    with narrow_build_confs(spark, n_docs, _TEXT_LSH_TINY_DOCS):
         return session_frame(spark, ("text_lsh_pairs", sf_dir), build)
 
 
@@ -736,8 +738,8 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     "over the current edge set). Twin queries, one oracle: both "
     "kernels must reproduce the recursive-CTE transitive closure "
     "exactly; parity across all three dedup families is additionally "
-    "pinned in tests/test_dedup.py. Production selects the kernel via "
-    "SPARK_GRAFT_CC_ALGO on cached_min_label_components.",
+    "pinned in tests/test_dedup.py. Callers select the kernel with "
+    "cached_min_label_components' algorithm argument.",
 )
 def dedup_cc_large_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.graph import cached_min_label_components

@@ -10,6 +10,7 @@ from .stateful import (
     stream_cep_pattern,
     stream_funnel_stages,
 )
+from .runner import run_to_memory
 
 __all__ = [
     "read_events_stream",
@@ -20,4 +21,5 @@ __all__ = [
     "funnel_merge",
     "funnel_prune",
     "stream_cep_pattern",
+    "run_to_memory",
 ]

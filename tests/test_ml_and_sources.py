@@ -316,6 +316,21 @@ def test_json_memo_computes_once(tmp_path):
     assert json_memo(p, "other-key", compute) == {"mae": 0.25}
     assert len(calls) == 2
 
+    # an unwritable path (its parent is a file) is the artifact store's
+    # policy: the computed value comes back, nothing is cached
+    (tmp_path / "not_a_dir").write_text("")
+    bad = str(tmp_path / "not_a_dir" / "memo.json")
+    assert json_memo(bad, "baseline|w=12", compute) == {"mae": 0.25}
+    assert json_memo(bad, "baseline|w=12", compute) == {"mae": 0.25}
+    assert len(calls) == 4
+
+    # a file that holds JSON but not an object reads as an empty memo
+    odd = tmp_path / "list.json"
+    odd.write_text("[1, 2]")
+    assert json_memo(str(odd), "baseline|w=12", compute) == {"mae": 0.25}
+    assert json_memo(str(odd), "baseline|w=12", compute) == {"mae": 0.25}
+    assert len(calls) == 5
+
 
 def test_timegan_save_load_roundtrip(spark, tmp_path):
     """S5 artifact contract for the TimeGAN: save -> load -> identical
